@@ -88,6 +88,73 @@ def parse_and_filter_month(fact: DataFrame, mes: int, parse_dates: bool = True) 
     return fact
 
 
+def _typology_name_pick(anexos: DataFrame) -> DataFrame:
+    """The J5/F1 typology-name pick (capital_sendas.py:203-263) for every
+    CUPS and each of the four (``EDAD < 14``, ``GENERO = 'F'``) flag
+    combinations: columns ``CUPS``, ``__ped``, ``__gin``,
+    ``TIPOLOGIA NOMBRE``.
+
+    The reference picks per distinct (GENERO, EDAD, SERVICIO) of the
+    fact, but the pick reads EDAD and GENERO only through those two
+    flags, so it is a function of (SERVICIO, flag, flag) and can be
+    precomputed from the dim without reading the fact. A combination
+    with no valid name has no row, which a left join turns into NULL,
+    as the reference's filtered-out groups do.
+    """
+    flags = F.inline(
+        F.array(
+            *[
+                F.struct(F.lit(ped).alias("__ped"), F.lit(gin).alias("__gin"))
+                for ped in (True, False)
+                for gin in (True, False)
+            ]
+        )
+    )
+    tmp = (
+        anexos.select("CUPS", "TIPOLOGIA NOMBRE")
+        .dropDuplicates()
+        .select("CUPS", _nz("TIPOLOGIA NOMBRE").alias("TIPOLOGIA NOMBRE"), flags)
+    )
+    tn = F.col("TIPOLOGIA NOMBRE")
+    contiene = F.when(
+        F.upper(tn).rlike("PEDIATRIA|GINECOLOGIA"), F.lit(1)
+    ).otherwise(F.lit(2))
+    # asignar_tipologia (:224-250) as a CASE chain — note the reference
+    # matches PEDIATRIA/GINECOLOGIA case-SENSITIVELY here (Python `in`),
+    # unlike the Contiene flag above (case=False), so we mirror both.
+    valida = (
+        F.when(tn.contains("PEDIATRIA") & F.col("__ped"), tn)
+        .when(tn.contains("GINECOLOGIA") & F.col("__gin"), tn)
+        .when(~tn.contains("PEDIATRIA") & ~tn.contains("GINECOLOGIA"), tn)
+        .otherwise(F.lit(""))
+    )
+    tmp = tmp.filter(valida != "").withColumn("Contiene", contiene)
+    # groupby(...).first() on the (SERVICIO, GENERO, EDAD, Contiene)
+    # sort (:215,:257) → keep-first with (Contiene, name) tiebreak; the
+    # name tiebreak makes ties deterministic where pandas' unstable
+    # sort is not.
+    return keep_first(
+        tmp,
+        keys=["CUPS", "__ped", "__gin"],
+        order_by=[F.col("Contiene"), tn],
+    ).select("CUPS", "__ped", "__gin", "TIPOLOGIA NOMBRE")
+
+
+def attach_typology_name(fact: DataFrame, anexos: DataFrame) -> DataFrame:
+    """J5/J6: left-join the :func:`_typology_name_pick` broadcast onto the
+    fact on SERVICIO and the two flags the pick reads. A NULL EDAD or
+    GENERO makes its flag NULL, so the row matches no pick, as the
+    reference's (GENERO, EDAD, SERVICIO) equi-join does."""
+    pick = _typology_name_pick(anexos)
+    return fact.join(
+        F.broadcast(pick),
+        (F.col("SERVICIO") == F.col("CUPS"))
+        & ((F.col("EDAD") < 14) == F.col("__ped"))
+        & ((F.col("GENERO") == "F") == F.col("__gin")),
+        "left",
+    ).drop("CUPS", "__ped", "__gin")
+
+
 def enrich(
     fact: DataFrame,
     codigos: DataFrame,
@@ -99,7 +166,8 @@ def enrich(
 
     Every dimension is deduplicated exactly as the reference does (on
     full rows or keep-first with the dim's own row order as tiebreak)
-    and broadcast — the fact side never shuffles here.
+    and broadcast. The fact is read ONCE and never shuffles here: the
+    J5 pick comes from the anexos dim alone (:func:`attach_typology_name`).
     """
     if ROW_ID not in fact.columns:
         fact = with_row_id(fact)
@@ -146,38 +214,7 @@ def enrich(
     ).drop("tipologia_temp")
 
     # J5/F1/D2/J6 — typology-name priority pick (:203-263).
-    combos = fact.select("GENERO", "EDAD", "SERVICIO").dropDuplicates()
-    dim_anexos = anexos.select("CUPS", "TIPOLOGIA NOMBRE").dropDuplicates()
-    tmp = combos.join(
-        F.broadcast(dim_anexos), combos["SERVICIO"] == dim_anexos["CUPS"], "left"
-    ).drop("CUPS")
-    tmp = tmp.withColumn("TIPOLOGIA NOMBRE", _nz("TIPOLOGIA NOMBRE"))
-    tn_upper = F.upper(F.col("TIPOLOGIA NOMBRE"))
-    tmp = tmp.withColumn(
-        "Contiene",
-        F.when(tn_upper.rlike("PEDIATRIA|GINECOLOGIA"), F.lit(1)).otherwise(F.lit(2)),
-    )
-    # asignar_tipologia (:224-250) as a CASE chain — note the reference
-    # matches PEDIATRIA/GINECOLOGIA case-SENSITIVELY here (Python `in`),
-    # unlike the Contiene flag above (case=False), so we mirror both.
-    tn = F.col("TIPOLOGIA NOMBRE")
-    valida = (
-        F.when(tn.contains("PEDIATRIA") & (F.col("EDAD") < 14), tn)
-        .when(tn.contains("GINECOLOGIA") & (F.col("GENERO") == "F"), tn)
-        .when(~tn.contains("PEDIATRIA") & ~tn.contains("GINECOLOGIA"), tn)
-        .otherwise(F.lit(""))
-    )
-    tmp = tmp.withColumn("Valida", valida).filter(F.col("Valida") != "")
-    # groupby(...).first() on the (SERVICIO, GENERO, EDAD, Contiene)
-    # sort (:215,:257) → keep-first with (Contiene, name) tiebreak; the
-    # name tiebreak makes ties deterministic where pandas' unstable
-    # sort is not.
-    tmp = keep_first(
-        tmp,
-        keys=["GENERO", "EDAD", "SERVICIO"],
-        order_by=[F.col("Contiene"), F.col("TIPOLOGIA NOMBRE")],
-    ).select("GENERO", "EDAD", "SERVICIO", "TIPOLOGIA NOMBRE")
-    fact = fact.join(F.broadcast(tmp), on=["GENERO", "EDAD", "SERVICIO"], how="left")
+    fact = attach_typology_name(fact, anexos)
 
     # J7 — affiliation dim (:268-271): keep-first per documento.
     if ROW_ID in bases.columns:
@@ -347,22 +384,26 @@ def _c4_zero_marks(fact: DataFrame) -> DataFrame:
     engine's final CASE — that window forced the full-width post-join
     frame through an Exchange(FACTURA) + sort just to attach a boolean
     consumed by a single branch. Here both join sides are NARROW (the
-    scoped row ids + the distinct 132P01 invoices), and the wide frame
+    scoped row ids + the invoices of the 132P01 rows), and the wide frame
     crosses no extra exchange. C4 scope is disjoint from every other
     mark set's scope (Qx*/H*/C1/C5/Qx1), so the rank-4 mark can never
     shadow or be shadowed within a row — semantics identical to the
     window branch (oracle-audited)."""
-    has132 = (
-        fact.filter(F.col("SERVICIO") == "132P01").select("FACTURA").distinct()
+    # no distinct: a semi join never duplicates, and a distinct on
+    # FACTURA would need its own exchange below the null-safe join's
+    has132 = fact.filter(F.col("SERVICIO") == "132P01").select(
+        F.col("FACTURA").alias("__inv")
     )
     scope = fact.filter(
         (F.col("AMBITO") == "CONSULTA EXTERNA")
         & (F.col("tipologia") == "C4")
         & F.col("SERVICIO").isin(SERVICIOS_A_INVALIDAR)
     ).select(ROW_ID, "FACTURA")
-    return scope.join(has132, "FACTURA", "left_semi").select(
-        ROW_ID, F.lit(0).alias("validacion")
-    )
+    # null-safe: the window groups NULL invoices together, so a NULL
+    # invoice holding a 132P01 row zeroes its other NULL-invoice rows
+    return scope.join(
+        has132, F.col("FACTURA").eqNullSafe(F.col("__inv")), "left_semi"
+    ).select(ROW_ID, F.lit(0).alias("validacion"))
 
 
 def rule_c5(fact: DataFrame) -> DataFrame:
@@ -444,13 +485,14 @@ def apply_rules(fact: DataFrame) -> DataFrame:
     the R4 invoice flag — versus the sequential fold's five full-fact
     joins and 2^5 lineage copies.
 
-    The enriched input arrives PINNED from :func:`run_pipeline` (when
-    ``materialize_fact`` is on): the earlier recompute-per-mark design
-    — measured faster in r3, when the row-id shuffle still carried the
-    unfiltered fact — re-measured slower in r12 once the fact build was
-    pre-filtered (interleaved A/B at sf0.1: pinned 5.95 s vs recompute
-    6.75 s min-of-4). What pins is the month-scoped batch plus the
-    enrichment columns, not the raw input.
+    ``fact`` must be ONE pinned frame (:func:`run_pipeline` passes its
+    ``enriched_stage`` pin): each mark set and the main pass read it in
+    separate branches and meet again on the row id, so a lazy input
+    whose ids are renumbered per execution (``global_row_number``)
+    would join marks to the wrong rows. The pin is also the faster
+    plan: recomputing the enrichment per consumer measured slower in
+    r12 (interleaved A/B at sf0.1: pinned 5.95 s vs recompute 6.75 s
+    min-of-4).
     """
     marks = None
     for rank, mk in _RANKED_MARKS:
@@ -556,27 +598,40 @@ def run_pipeline(
     the graph nodes it realizes (tables, Condicion_*, Regla_*,
     Calculo_*). See :mod:`etl_sendas_spark.plans.lineage`.
 
-    ``materialize_fact`` pins the month-scoped, row-id'd fact as a
-    stage table before enrichment. The rule engine reads the fact from
-    5 mark sets + the main pass + comprobar; without the pin each
-    consumer re-executes the scan → row-number range shuffle → source
-    joins (measured 8.96 s vs 6.62 s at sf0.1). The month filter keeps
-    a small fraction of the input (7.8 % on the driver fact), so what
-    materializes is the scoped batch — the stage table the reference
-    itself writes between phases (``capital_sendas.py:600``) — not the
-    raw input.
+    The ENRICHED frame is pinned as one stage table (``enriched_stage``)
+    before the rule engine, and the pin is required for correctness,
+    not only speed: the rule engine reads the frame from 6 mark sets,
+    the main pass and comprobar, and joins them back on the row id.
+    Row ids from :func:`..sources.readers.global_row_number` (the driver
+    fact's) are stable only within one execution, so unpinned consumers
+    could each number the rows differently and mark the wrong rows.
+    Enrichment reads the fact once (all dims broadcast), so no separate
+    fact pin is needed below it. What pins is the month-scoped batch
+    plus the enrichment columns, not the raw input — the stage table
+    the reference itself writes between phases
+    (``capital_sendas.py:600``).
 
     The pin mechanism is pluggable (:mod:`..materialize`): ``True``
     resolves the strategy from the ``spark.etl_sendas.materialize``
     conf (default ``local`` = ``localCheckpoint``, fastest but not
     fault-tolerant); pass ``"reliable"`` or ``"parquet"`` — or set the
-    conf — on a cluster so a lost executor can't kill the run. Set
-    False to keep the plan fully lazy (e.g. when a caller embeds this
-    DAG inside a larger optimized plan, or when the scoped batch is too
-    large to pin under executor storage and recompute is preferred).
+    conf — on a cluster so a lost executor can't kill the run. ``False``
+    and the ``none`` strategy are rejected with ``ValueError``.
     """
-    from ..materialize import materialize as _pin
+    from ..materialize import materialize as _pin, resolve_strategy
     from .lineage import STAGES
+
+    strategy = "none" if materialize_fact is False else resolve_strategy(
+        fact.sparkSession,
+        materialize_fact if isinstance(materialize_fact, str) else None,
+    )
+    if strategy == "none":
+        raise ValueError(
+            "run_pipeline needs its enriched-stage pin: row ids are stable "
+            "only within one execution, so the lazy plan can mark wrong "
+            f"rows (got materialize_fact={materialize_fact!r}, "
+            f"strategy={strategy!r})"
+        )
 
     impls = {
         "ingest_filters": ingest_filters,
@@ -587,26 +642,12 @@ def run_pipeline(
         "apply_rules": apply_rules,
         "finalize": finalize,
     }
-    _strategy = materialize_fact if isinstance(materialize_fact, str) else None
     for stage in STAGES:
-        if stage.name == "enrich":
-            if ROW_ID not in fact.columns:
-                # the rule engine threads row identity from here on
-                fact = with_row_id(fact)
-            if materialize_fact:
-                fact = _pin(fact, name="fact_stage", strategy=_strategy)
-        if stage.name == "apply_rules" and materialize_fact:
-            # Pin the ENRICHED frame too: the rule engine reads it from
-            # 5 mark sets + the main pass, and re-running the (broadcast)
-            # enrichment per consumer — the r3 decision, taken when the
-            # row-id shuffle still carried the unfiltered fact — now
-            # measures SLOWER than one wide pin of the month-scoped
-            # batch (r12 A/B at sf0.1, interleaved min-of-4:
-            # fact-only 6.75 s, fact+enriched 5.95 s; the enriched pin
-            # adds ~8 derived columns to rows already scoped to the
-            # month, so its footprint is the same order as the fact
-            # pin it sits on).
-            fact = _pin(fact, name="enriched_stage", strategy=_strategy)
+        if stage.name == "enrich" and ROW_ID not in fact.columns:
+            # the rule engine threads row identity from here on
+            fact = with_row_id(fact)
+        if stage.name == "apply_rules":
+            fact = _pin(fact, name="enriched_stage", strategy=strategy)
         if stage.name == "finalize":
             return impls[stage.name](fact), comprobar(fact)
         fact = impls[stage.name](fact)

@@ -19,8 +19,9 @@ only; see plans/capital_sendas.py for the per-stage citations).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
-from ..sources.readers import ROW_ID, read_table
+from ..sources.readers import ROW_ID, local_relation, read_table
 from .capital_sendas import run_pipeline
 
 TIPS = ["C1", "C4", "C5", "C7", "C8", "H1", "H2", "H9", "HD", "ARI",
@@ -34,10 +35,16 @@ MES = 3
 _LOCAL_DIM_READ_CAP = 256 * 1024 * 1024  # driver-side read only below this
 
 
-def _part_keys(spark: SparkSession, sf_dir: str, part: DataFrame) -> list[int]:
+def _string_schema(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+def _part_keys(spark: SparkSession, sf_dir: str) -> list[int]:
     """sorted(DISTINCT p_partkey % 200) — pyarrow fast path for small
     local files, Spark job otherwise. Both paths compute the identical
-    key universe (the oracle's `keys` CTE)."""
+    key universe (the oracle's `keys` CTE). The Spark path alone reads
+    ``part`` through Spark, so the fast path also skips that read's
+    schema-inference job."""
     import os
 
     path = os.path.join(sf_dir, "part.parquet")
@@ -59,6 +66,7 @@ def _part_keys(spark: SparkSession, sf_dir: str, part: DataFrame) -> list[int]:
             )
     except Exception:  # noqa: BLE001 — any local-read trouble → cluster path
         pass
+    part = read_table(spark, sf_dir, "part")
     return sorted(
         r["k"]
         for r in part.select((F.col("p_partkey") % 200).alias("k"))
@@ -70,11 +78,19 @@ def _part_keys(spark: SparkSession, sf_dir: str, part: DataFrame) -> list[int]:
 def sendas_inputs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(fact, codigos, tipologia, anexos, bases) for :func:`run_pipeline`.
+
+    ``fact`` is lazy and month-scoped, with a ``global_row_number`` row
+    id that is stable only within one execution; feed it to
+    ``run_pipeline``, whose single enriched-stage pin fixes the ids
+    for every rule branch. ``codigos``, ``tipologia`` and ``anexos``
+    are driver-built Arrow local relations (``LocalTableScan``);
+    ``bases`` is a pruned scan of ``customer``.
+    """
     # widen=False: global_row_number range-repartitions immediately, so
     # the fact-scan widening exchange would be pure waste
     li = read_table(spark, sf_dir, "lineitem", widen=False)
     orders = read_table(spark, sf_dir, "orders")
-    part = read_table(spark, sf_dir, "part")
     cust = read_table(spark, sf_dir, "customer")
 
     # the driver's synthetic lineitem is NOT keyed by (orderkey,
@@ -154,7 +170,7 @@ def sendas_inputs(
     )
 
     # Dimensions are built DRIVER-SIDE (one tiny collect for the key
-    # universe, then local rows → createDataFrame): mirrors the
+    # universe, then local rows → an Arrow LocalRelation): mirrors the
     # reference, whose dims arrive as driver-downloaded Excel files
     # (capital_sendas.py:65-77), and removes four scan+distinct+
     # broadcast job chains that dominated wall time at bench SFs. The
@@ -163,11 +179,14 @@ def sendas_inputs(
     # universe is read with pyarrow instead of a Spark job (the same
     # local-stat shortcut readers.estimated_scan_splits takes — r12:
     # the collect job was ~0.9 s of the flagship's wall); larger or
-    # remote inputs keep the cluster path.
-    keys = _part_keys(spark, sf_dir, part)
-    codigos = spark.createDataFrame(
+    # remote inputs keep the cluster path. The rows reach the JVM as a
+    # LocalTableScan (readers.local_relation), not a Python RDD, so the
+    # four dim scans in enrich start no Python-worker jobs.
+    keys = _part_keys(spark, sf_dir)
+    codigos = local_relation(
+        spark,
         [(str(k), f"CON-{k % 7}", str(k % 5)) for k in keys],
-        ["SERVICIO", "CONCEPTO", "GRUPO QX"],
+        _string_schema("SERVICIO", "CONCEPTO", "GRUPO QX"),
     )
 
     tip_rows = [
@@ -183,15 +202,20 @@ def sendas_inputs(
         for s in SPECIAL
         for cc in ("F", "O")
     ]
-    tipologia = spark.createDataFrame(
-        tip_rows + spec_rows, ["SERVICIO", "NOM_CENTROCOS", "tipologia", ROW_ID]
+    tipologia = local_relation(
+        spark,
+        tip_rows + spec_rows,
+        _string_schema("SERVICIO", "NOM_CENTROCOS", "tipologia").add(
+            ROW_ID, T.LongType()
+        ),
     )
 
-    anexos = spark.createDataFrame(
+    anexos = local_relation(
+        spark,
         [(str(k), NAMES[k % 6]) for k in keys]
         + [(str(k), NAMES[(k + 2) % 6]) for k in keys]
         + [(s, "MEDICINA GENERAL") for s in SPECIAL],
-        ["CUPS", "TIPOLOGIA NOMBRE"],
+        _string_schema("CUPS", "TIPOLOGIA NOMBRE"),
     )
 
     bases = cust.filter(F.col("c_custkey") % 4 != 0).select(

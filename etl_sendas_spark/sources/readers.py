@@ -31,6 +31,33 @@ from pyspark.sql import types as T
 ROW_ID = "__row_id"
 
 
+def local_relation(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
+) -> DataFrame:
+    """Driver-resident rows as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_tuples)`` plans as ``Scan
+    ExistingRDD`` over a Python RDD: every scan of the frame (each
+    broadcast build, each re-execution) runs a Python-worker job, one
+    task per default-parallelism slot. Going through a ``pyarrow.Table``
+    with the explicit ``schema`` instead hands the JVM the rows once, as
+    a ``LocalTableScan`` that no Python worker ever touches. The schema
+    is taken as given (no inference), so NULLs and empty inputs keep
+    their declared types. For small frames only: the rows pass through
+    the driver.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def global_row_number(
     df: DataFrame, order_by: Sequence[str], out_col: str = ROW_ID
 ) -> DataFrame:
@@ -46,6 +73,13 @@ def global_row_number(
     count pass, no offset join. Ties across a range boundary get
     arbitrary relative ids, so the sort key should be unique (or
     duplicates interchangeable).
+
+    The ids are stable only within ONE execution (or one pin of the
+    result): the range partitioner seeds its boundary sample with the
+    RDD id, so two actions on the same frame can draw different
+    boundaries and hand the same row different ids. A consumer that
+    joins ids across branches must read them from a single pinned
+    frame — :func:`..plans.capital_sendas.run_pipeline` pins for this.
     """
     from pyspark.sql import Window
 
@@ -252,7 +286,6 @@ def dim_frame_to_spark(
     - NaN/NA → SQL NULL.
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
     pdf = pdf.copy()
     if promote_first_row:
@@ -270,7 +303,7 @@ def dim_frame_to_spark(
     schema = T.StructType(
         [T.StructField(c, T.StringType(), True) for c in pdf.columns]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def read_excel_dim(

@@ -19,8 +19,6 @@ from etl_sendas_spark.materialize import (
     release,
 )
 
-MODES = ["local", "reliable", "parquet", "none"]
-
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -56,7 +54,7 @@ def test_release_is_safe_on_unpinned_frames(spark):
     assert df.count() == 10
 
 
-@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("mode", ["local", "reliable", "parquet"])
 def test_flagship_identical_under_every_strategy(mode, spark, duck, strategy_conf):
     """The flagship pipeline must produce byte-identical results under
     every pin strategy, and (reliable mode = the judge's explicit gate)
@@ -71,11 +69,30 @@ def test_flagship_identical_under_every_strategy(mode, spark, duck, strategy_con
     pd.testing.assert_frame_equal(ours, theirs, check_dtype=False, atol=1e-9)
 
 
+def test_flagship_rejects_lazy_strategy(spark, strategy_conf):
+    """run_pipeline's enriched-stage pin is required for correctness:
+    ``global_row_number`` ids are stable only within one execution, so
+    the lazy plan (``materialize_fact=False`` or the ``none`` strategy,
+    by argument or conf) could join rule marks to the wrong rows. All
+    three must raise before any work runs."""
+    from etl_sendas_spark.plans.capital_sendas import run_pipeline
+    from etl_sendas_spark.plans.sendas_driver_query import MES, sendas_inputs
+
+    inputs = sendas_inputs(spark, SF_ORACLE)
+    for opt in (False, "none"):
+        with pytest.raises(ValueError, match="pin"):
+            run_pipeline(*inputs, mes=MES, parse_dates=False, materialize_fact=opt)
+    spark.conf.set(CONF_STRATEGY, "none")
+    with pytest.raises(ValueError, match="pin"):
+        run_pipeline(*inputs, mes=MES, parse_dates=False)
+
+
 @pytest.mark.parametrize("mode", ["reliable", "parquet"])
 def test_flagship_stage_pin_holds_in_cluster_modes(mode, spark, strategy_conf):
     """The r3 plan guarantee — no fact-source rescan above the pin —
-    must survive the strategy swap: all 7 fact consumers read the stage
-    table in reliable/parquet mode too."""
+    must survive the strategy swap: all 8 consumers (6 mark sets, the
+    main pass, comprobar) read the stage table in reliable/parquet mode
+    too."""
     from etl_sendas_spark.plans.inventory import sendas_full_pipeline
 
     spark.conf.set(CONF_STRATEGY, mode)
@@ -84,10 +101,8 @@ def test_flagship_stage_pin_holds_in_cluster_modes(mode, spark, strategy_conf):
     assert "lineitem.parquet" not in plan, plan[:2000]
     assert "orders.parquet" not in plan, plan[:2000]
     if mode == "parquet":
-        # the stage table is a real parquet dir, named for debuggability.
-        # Since r12 the rule engine reads the ENRICHED pin (which itself
-        # is built on the fact pin — see run_pipeline), so that is the
-        # stage table visible in the final plan.
+        # the stage table is a real parquet dir, named for debuggability:
+        # run_pipeline's one pin, of the ENRICHED frame.
         assert "enriched_stage" in plan
 
 

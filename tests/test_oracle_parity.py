@@ -54,11 +54,15 @@ def parity_results(request, spark):
         }
     )
     tls = threading.local()
+    cons = []  # every thread's connection, closed once the pool drains
+    cons_lock = threading.Lock()
 
     def work(name):
         try:
             if not hasattr(tls, "con"):
                 con = duckdb.connect()
+                with cons_lock:
+                    cons.append(con)
                 for t in TABLES:
                     path = os.path.join(SF_ORACLE, f"{t}.parquet")
                     if os.path.exists(path):
@@ -69,13 +73,17 @@ def parity_results(request, spark):
             ours = _canon(ALL_QUERIES[name](spark, SF_ORACLE).toPandas())
             theirs = _canon(tls.con.execute(ALL_ORACLES[name]).df())
             return name, (ours, theirs, None)
-        except BaseException as e:  # noqa: BLE001 — re-raised in the test
+        except Exception as e:  # noqa: BLE001 — re-raised in the test
             return name, (None, None, e)
 
     out = {}
-    with ThreadPoolExecutor(max_workers=_N_PARITY_WORKERS) as pool:
-        for name, res in pool.map(work, names):
-            out[name] = res
+    try:
+        with ThreadPoolExecutor(max_workers=_N_PARITY_WORKERS) as pool:
+            for name, res in pool.map(work, names):
+                out[name] = res
+    finally:
+        for con in cons:
+            con.close()
     return out
 
 

@@ -180,18 +180,73 @@ def test_update_then_merge_shuffles_one_join_only(spark):
 
 
 def test_flagship_reads_fact_from_stage_table_not_rescans(spark):
-    """After the materialize_fact pin, the flagship's executed plan must
-    contain NO fact-table parquet scans: the 7 fact consumers (5 mark
-    sets, main pass, comprobar) all read the checkpointed stage table.
-    The only parquet scan allowed is the tiny ``bases`` dim (customer,
-    key-column-pruned, broadcast). A lineitem/orders scan reappearing
-    here means some consumer silently re-derives from the source."""
+    """``run_pipeline`` takes ONE pin, of the enriched frame, and every
+    consumer above it (6 mark sets, the main pass, comprobar) must read
+    that stage table: the executed plan holds no source parquet scan
+    (fact or ``bases``) and no dim ``LocalTableScan``, only scans of the
+    pinned RDD. A source scan or a dim scan reappearing here means some
+    consumer silently re-derives the fact or re-runs the enrichment."""
     from etl_sendas_spark.plans.inventory import sendas_full_pipeline
 
     out = sendas_full_pipeline(spark, SF_ORACLE)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "lineitem.parquet" not in plan, plan[:2000]
-    assert "orders.parquet" not in plan, plan[:2000]
+    assert ".parquet" not in plan, plan[:2000]
+    assert "LocalTableScan" not in plan, plan[:2000]
+    assert "Scan ExistingRDD" in plan, plan[:2000]
+
+
+def test_local_relation_keeps_types_nulls_and_plans_locally(spark):
+    """readers.local_relation hands driver rows to the JVM as a
+    LocalTableScan (no Python RDD), with the declared schema as is:
+    types, nullability and NULL cells survive, empty inputs too."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from etl_sendas_spark.sources.readers import local_relation
+
+    schema = T.StructType(
+        [
+            T.StructField("s", T.StringType()),
+            T.StructField("i", T.IntegerType()),
+            T.StructField("l", T.LongType(), False),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("b", T.BooleanType()),
+            T.StructField("dt", T.DateType()),
+        ]
+    )
+    rows = [
+        ("a", 1, 1 << 40, 0.5, True, dt.date(2024, 9, 1)),
+        (None, None, 2, None, None, None),
+    ]
+    df = local_relation(spark, rows, schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    empty = local_relation(spark, [], schema)
+    assert empty.schema == schema and empty.count() == 0
+
+
+def test_enrich_dims_scan_locally_not_through_python(spark):
+    """The driver-built dims of ``sendas_inputs`` (and the Excel dims'
+    ``dim_frame_to_spark`` path) plan as LocalTableScans: enrich's plan
+    must contain no ``Scan ExistingRDD``, whose every execution would
+    start a Python-worker job per dim scan."""
+    import pandas as pd
+
+    from etl_sendas_spark.plans.capital_sendas import enrich
+    from etl_sendas_spark.plans.sendas_driver_query import sendas_inputs
+    from etl_sendas_spark.sources.readers import dim_frame_to_spark
+
+    fact, codigos, tipologia, anexos, bases = sendas_inputs(spark, SF_ORACLE)
+    plan = _plan(enrich(fact, codigos, tipologia, anexos, bases))
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+    dim = dim_frame_to_spark(spark, pd.DataFrame({"CUPS": ["1", None]}))
+    assert "ExistingRDD" not in _plan(dim)
 
 
 def test_minhash_signatures_are_fully_narrow(spark):
@@ -227,17 +282,20 @@ def test_minhash_lsh_shuffle_budget(spark):
 
 def test_flagship_exchange_budget(spark):
     """Hard exchange budget for the flagship's EXECUTED plan (above the
-    fact stage pin): 52 measured — the 7 fact consumers' rule windows
-    and the broadcast-dim enrichment. A refactor that silently adds a
-    shuffle per consumer (+7) or degrades a broadcast join to a shuffle
-    join must turn this red; raise the budget only with a measured
-    reason."""
+    single enriched-stage pin): 11 measured at sf0.001 and sf0.01 on
+    local[8] with 4 shuffle partitions — R1 1, R2 2, R3 1, the R4
+    null-safe semi join 2, R7 2 (INGRESO dedup, fold repartition), R8
+    1, and the two row-id exchanges of the mark aggregation and the
+    fact side of the mark join. Was 52, a stale budget. A refactor that
+    silently adds a shuffle per consumer, or lets a distinct reappear
+    below the R4 semi join, must turn this red; raise the budget only
+    with a measured reason."""
     from etl_sendas_spark.plans.inventory import sendas_full_pipeline
 
     out = sendas_full_pipeline(spark, SF_ORACLE)
     pe = out._jdf.queryExecution().executedPlan().toString()
     n = len(re.findall(r"Exchange (?:hash|range)partitioning", pe))
-    assert n <= 52, f"flagship executed-plan exchanges grew to {n} (budget 52)"
+    assert n <= 11, f"flagship executed-plan exchanges grew to {n} (budget 11)"
 
 
 def test_keep_first_compiles_to_map_side_group_limit(spark):

@@ -11,12 +11,16 @@ by R1 then rewritten by R8).
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from etl_sendas_spark.operators.relational import keep_first
 from etl_sendas_spark.plans.capital_sendas import (
     apply_rules,
+    apply_rules_sequential,
+    attach_typology_name,
     comprobar,
     enrich,
     rule_c1,
@@ -166,6 +170,24 @@ def test_rule_c4_case_chain_and_invoice_zeroing(spark):
     ]
     got = flags(rule_c4(fact_df(spark, rows)))
     assert got == {0: 1, 1: 4, 2: 0, 3: 0, 4: 0, 5: 1, 6: 0}
+
+
+def test_c4_zeroing_groups_null_invoices_like_the_fold(spark):
+    """The one-pass engine's R4 zeroing must treat a NULL FACTURA as one
+    invoice, as the sequential fold's FACTURA window does: a NULL
+    invoice holding a 132P01 row zeroes its invalidable C4 rows."""
+    CE = "CONSULTA EXTERNA"
+    rows = [
+        {"FACTURA": None, "AMBITO": "URGENCIAS", "tipologia": "C5", "SERVICIO": "132P01"},  # 0
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890285", "CANT_SERVICIO": 2},  # 1 → 0
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890502", "CANT_SERVICIO": 6},  # 2 → 0
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "777777", "CANT_SERVICIO": 1},  # 3 → 1
+        {"FACTURA": "F1", "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890285", "CANT_SERVICIO": 2},  # 4 → 1
+    ]
+    fact = fact_df(spark, rows)
+    got = flags(apply_rules(fact))
+    assert got == flags(apply_rules_sequential(fact))
+    assert got[1] == 0 and got[2] == 0 and got[3] == 1 and got[4] == 1
 
 
 # ---------------------------------------------------------------------------
@@ -350,6 +372,82 @@ def test_enrich_joins_and_priority_pick(spark):
     assert rows[("S1", "CC2", "M", 30)]["tipologia"] == "H1"
     assert rows[("S2", "CC1", "M", 30)]["tipologia"] == "Qx1"
     assert rows[("S3", "CC1", "M", 30)]["tipologia"] == "H2"
+
+
+def _combos_pick(fact, anexos):
+    """The fact-wide J5 formulation: pick per distinct (GENERO, EDAD,
+    SERVICIO) of the fact, then equi-join back on all three."""
+    combos = fact.select("GENERO", "EDAD", "SERVICIO").dropDuplicates()
+    dim = anexos.select("CUPS", "TIPOLOGIA NOMBRE").dropDuplicates()
+    tmp = combos.join(dim, combos["SERVICIO"] == dim["CUPS"], "left").drop("CUPS")
+    tn = F.col("TIPOLOGIA NOMBRE")
+    tmp = tmp.withColumn("TIPOLOGIA NOMBRE", F.coalesce(tn, F.lit("")))
+    tmp = tmp.withColumn(
+        "Contiene",
+        F.when(F.upper(tn).rlike("PEDIATRIA|GINECOLOGIA"), 1).otherwise(2),
+    )
+    valida = (
+        F.when(tn.contains("PEDIATRIA") & (F.col("EDAD") < 14), tn)
+        .when(tn.contains("GINECOLOGIA") & (F.col("GENERO") == "F"), tn)
+        .when(~tn.contains("PEDIATRIA") & ~tn.contains("GINECOLOGIA"), tn)
+        .otherwise(F.lit(""))
+    )
+    tmp = keep_first(
+        tmp.filter(valida != ""),
+        keys=["GENERO", "EDAD", "SERVICIO"],
+        order_by=[F.col("Contiene"), tn],
+    ).select("GENERO", "EDAD", "SERVICIO", "TIPOLOGIA NOMBRE")
+    return fact.join(tmp, on=["GENERO", "EDAD", "SERVICIO"], how="left")
+
+
+def test_dim_side_typology_pick_equals_combos_pick(spark):
+    """The J5 pick precomputed per (CUPS, EDAD < 14, GENERO = 'F') from
+    the anexos dim must give every fact row the name the fact-wide
+    (GENERO, EDAD, SERVICIO) pick gives it, NULL keys included."""
+    names = {
+        "SP": ["CONSULTA PEDIATRIA"],
+        "SG": ["CONSULTA GINECOLOGIA"],
+        "SB": ["CONSULTA PEDIATRIA", "CONSULTA GINECOLOGIA"],
+        "SPG": ["PEDIATRIA Y GINECOLOGIA"],
+        "SN": ["MEDICINA GENERAL", "MEDICINA GENERAL"],
+        # every kind at once, plus a lower-case name: Contiene matches it
+        # case-insensitively, the validity CASE does not
+        "SM": ["TERAPIA", "CONSULTA PEDIATRIA", "CONSULTA GINECOLOGIA",
+               "pediatria menor"],
+        "SX": [None],
+    }
+    anexos = spark.createDataFrame(
+        [(cups, n) for cups, ns in names.items() for n in ns],
+        "CUPS string, `TIPOLOGIA NOMBRE` string",
+    )
+    grid = [
+        (i, *key)
+        for i, key in enumerate(
+            itertools.product(
+                ("F", "M", None), (None, 13, 14, 40), [*names, "UNMATCHED", None]
+            )
+        )
+    ]
+    fact = spark.createDataFrame(
+        grid, "rid long, GENERO string, EDAD int, SERVICIO string"
+    )
+    ours = {
+        r["rid"]: r["TIPOLOGIA NOMBRE"]
+        for r in attach_typology_name(fact, anexos).collect()
+    }
+    theirs = {
+        r["rid"]: r["TIPOLOGIA NOMBRE"]
+        for r in _combos_pick(fact, anexos).collect()
+    }
+    assert len(ours) == len(grid)
+    assert ours == theirs
+    picked = {(g, e, s): ours[i] for i, g, e, s in grid}
+    assert picked[("M", 13, "SB")] == "CONSULTA PEDIATRIA"
+    assert picked[("F", 40, "SB")] == "CONSULTA GINECOLOGIA"
+    assert picked[("M", 40, "SB")] is None
+    assert picked[("F", None, "SN")] is None
+    assert picked[("M", 40, "SM")] == "pediatria menor"
+    assert picked[(None, 13, "SP")] is None
 
 
 def test_enrich_edad_branches(spark):
