@@ -4,9 +4,8 @@ The reference pipeline persists stage tables between phases by writing
 files to disk (``capital_sendas.py:600`` writes the phase output and
 later phases read it back). The Spark engine needs the same primitive —
 "cut the lineage, pin the intermediate" — at three places: the one
-enriched stage inside :func:`..plans.capital_sendas.run_pipeline` (a
-correctness requirement there: its row ids are stable only within one
-pin), the dedup pair outputs (:mod:`..operators.dedupe`), and each
+enriched stage inside :func:`..plans.capital_sendas.run_pipeline`, the
+dedup pair outputs (:mod:`..operators.dedupe`), and each
 connected-components round. The right *mechanism* depends on where the
 job runs, so it is a strategy knob, not a hard-coded call:
 
@@ -27,8 +26,10 @@ job runs, so it is a strategy knob, not a hard-coded call:
   and the read-back scan gets column pruning / data skipping that
   checkpoint block reads do not.
 - ``none`` — identity: keep the plan fully lazy (for callers that
-  embed these DAGs inside a larger optimized plan). ``run_pipeline``
-  rejects it, since its pin is what keeps row ids consistent.
+  embed these DAGs inside a larger optimized plan). Every consumer then
+  recomputes the frame, so a pinned frame's columns must be the same on
+  every execution — ``run_pipeline``'s are (its row ids are
+  key-derived or positional over fixed files).
 
 Strategy resolution order (first set wins):
 explicit ``strategy=`` argument → Spark conf
@@ -92,8 +93,9 @@ def materialize(
     """Eagerly pin ``df`` as a stage table and return the pinned frame.
 
     Every consumer of the returned frame reads the same computed rows,
-    which is what makes per-execution values (such as
-    ``global_row_number`` ids) safe to join across its branches.
+    which also makes per-execution values (such as
+    ``monotonically_increasing_id`` above a shuffle) safe to join
+    across its branches.
 
     ``name`` labels the parquet stage path (and makes stage dirs
     readable when debugging a ``parquet``-mode run); it is ignored by

@@ -188,7 +188,7 @@ def enrich(
     if ROW_ID in tipologia.columns:
         tip = tipologia.withColumnRenamed(ROW_ID, "__dim_id")
     else:
-        tip = with_row_id(tipologia, order_by=None).withColumnRenamed(ROW_ID, "__dim_id")
+        tip = with_row_id(tipologia).withColumnRenamed(ROW_ID, "__dim_id")
     tip_general = keep_first(
         tip.filter(~F.col("tipologia").isin(H1_H5)).select(
             "SERVICIO", "tipologia", "__dim_id"
@@ -485,14 +485,14 @@ def apply_rules(fact: DataFrame) -> DataFrame:
     the R4 invoice flag — versus the sequential fold's five full-fact
     joins and 2^5 lineage copies.
 
-    ``fact`` must be ONE pinned frame (:func:`run_pipeline` passes its
-    ``enriched_stage`` pin): each mark set and the main pass read it in
-    separate branches and meet again on the row id, so a lazy input
-    whose ids are renumbered per execution (``global_row_number``)
-    would join marks to the wrong rows. The pin is also the faster
-    plan: recomputing the enrichment per consumer measured slower in
-    r12 (interleaved A/B at sf0.1: pinned 5.95 s vs recompute 6.75 s
-    min-of-4).
+    Each mark set and the main pass read ``fact`` in separate branches
+    and meet again on the row id, so its ids must be the same on every
+    execution of the frame: key-derived (``sendas_inputs``), positional
+    over a fixed file layout (``load_fact_files``), or read from a pin.
+    :func:`run_pipeline` passes its ``enriched_stage`` pin, which is
+    the faster plan: recomputing the enrichment per consumer measured
+    slower in r12 (interleaved A/B at sf0.1: pinned 5.95 s vs
+    recompute 6.75 s min-of-4).
     """
     marks = None
     for rank, mk in _RANKED_MARKS:
@@ -587,7 +587,6 @@ def run_pipeline(
     bases: DataFrame,
     mes: int,
     parse_dates: bool = True,
-    materialize_fact: bool | str = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full DAG: ingest filters → parse/cast → enrich → rules → project.
     Returns (capital_sendas, comprobar).
@@ -599,39 +598,24 @@ def run_pipeline(
     Calculo_*). See :mod:`etl_sendas_spark.plans.lineage`.
 
     The ENRICHED frame is pinned as one stage table (``enriched_stage``)
-    before the rule engine, and the pin is required for correctness,
-    not only speed: the rule engine reads the frame from 6 mark sets,
-    the main pass and comprobar, and joins them back on the row id.
-    Row ids from :func:`..sources.readers.global_row_number` (the driver
-    fact's) are stable only within one execution, so unpinned consumers
-    could each number the rows differently and mark the wrong rows.
-    Enrichment reads the fact once (all dims broadcast), so no separate
-    fact pin is needed below it. What pins is the month-scoped batch
-    plus the enrichment columns, not the raw input — the stage table
-    the reference itself writes between phases
+    before the rule engine, which reads it from 6 mark sets, the main
+    pass and comprobar: the pin computes the enrichment once instead of
+    per consumer. Enrichment reads the fact once (all dims broadcast),
+    so no separate fact pin is needed below it. What pins is the
+    month-scoped batch plus the enrichment columns, not the raw input —
+    the stage table the reference itself writes between phases
     (``capital_sendas.py:600``).
 
-    The pin mechanism is pluggable (:mod:`..materialize`): ``True``
-    resolves the strategy from the ``spark.etl_sendas.materialize``
-    conf (default ``local`` = ``localCheckpoint``, fastest but not
-    fault-tolerant); pass ``"reliable"`` or ``"parquet"`` — or set the
-    conf — on a cluster so a lost executor can't kill the run. ``False``
-    and the ``none`` strategy are rejected with ``ValueError``.
+    The pin is a speed choice, not a correctness one: the fact's row
+    ids are the same on every execution, so the result does not depend
+    on the strategy. It comes from the ``spark.etl_sendas.materialize``
+    conf (:mod:`..materialize`; default ``local`` = ``localCheckpoint``,
+    fastest but not fault-tolerant). Set ``reliable`` or ``parquet`` on
+    a cluster so a lost executor can't kill the run, or ``none`` to keep
+    the whole DAG lazy.
     """
-    from ..materialize import materialize as _pin, resolve_strategy
+    from ..materialize import materialize as _pin
     from .lineage import STAGES
-
-    strategy = "none" if materialize_fact is False else resolve_strategy(
-        fact.sparkSession,
-        materialize_fact if isinstance(materialize_fact, str) else None,
-    )
-    if strategy == "none":
-        raise ValueError(
-            "run_pipeline needs its enriched-stage pin: row ids are stable "
-            "only within one execution, so the lazy plan can mark wrong "
-            f"rows (got materialize_fact={materialize_fact!r}, "
-            f"strategy={strategy!r})"
-        )
 
     impls = {
         "ingest_filters": ingest_filters,
@@ -643,11 +627,8 @@ def run_pipeline(
         "finalize": finalize,
     }
     for stage in STAGES:
-        if stage.name == "enrich" and ROW_ID not in fact.columns:
-            # the rule engine threads row identity from here on
-            fact = with_row_id(fact)
         if stage.name == "apply_rules":
-            fact = _pin(fact, name="enriched_stage", strategy=strategy)
+            fact = _pin(fact, name="enriched_stage")
         if stage.name == "finalize":
             return impls[stage.name](fact), comprobar(fact)
         fact = impls[stage.name](fact)

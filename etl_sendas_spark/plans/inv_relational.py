@@ -651,7 +651,7 @@ def u_union_dedup_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority")
         ),
     )
-    return load_fact_files(spark, [file0, file1])
+    return load_fact_files(spark, [file0, file1]).drop(ROW_ID)
 
 
 U_UNION_SQL = """

@@ -4,8 +4,11 @@
 fact + dimension frames with fully deterministic derivations (every
 expression exists identically in Spark and DuckDB — floors instead of
 double→int casts, explicit lpad/concat, list indexing). The fact row id
-is ``l_orderkey*10 + l_linenumber`` so every order-sensitive dedup and
-walk in the rule engine ties identically in both engines.
+is ``l_orderkey << 16 | l_linenumber << 8 | rank``, with ``rank`` the
+row number within the key pair over the other lineitem columns: it
+sorts exactly like the oracle's ``ROW_NUMBER()`` over all 11 columns,
+so every order-sensitive dedup and walk in the rule engine ties
+identically in both engines.
 
 ``SENDAS_FULL_SQL`` is the DuckDB mirror of the whole DAG — ingest
 filters, month filter, J2–J7 enrichment incl. the F1 priority pick,
@@ -18,7 +21,7 @@ only; see plans/capital_sendas.py for the per-stage citations).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from ..sources.readers import ROW_ID, local_relation, read_table
@@ -80,41 +83,35 @@ def sendas_inputs(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """(fact, codigos, tipologia, anexos, bases) for :func:`run_pipeline`.
 
-    ``fact`` is lazy and month-scoped, with a ``global_row_number`` row
-    id that is stable only within one execution; feed it to
-    ``run_pipeline``, whose single enriched-stage pin fixes the ids
-    for every rule branch. ``codigos``, ``tipologia`` and ``anexos``
-    are driver-built Arrow local relations (``LocalTableScan``);
-    ``bases`` is a pruned scan of ``customer``.
+    ``fact`` is lazy and month-scoped. Its row id is derived from the
+    lineitem key (see below), so it is the same on every execution:
+    ``run_pipeline`` gives the same result pinned or lazy. A key outside
+    the id's bit budget fails the query. ``codigos``, ``tipologia`` and
+    ``anexos`` are driver-built Arrow local relations
+    (``LocalTableScan``); ``bases`` is a pruned scan of ``customer``.
     """
-    # widen=False: global_row_number range-repartitions immediately, so
-    # the fact-scan widening exchange would be pure waste
+    # widen=False: the row-id window hash-partitions the fact right
+    # away, so the fact-scan widening exchange would be pure waste
     li = read_table(spark, sf_dir, "lineitem", widen=False)
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
 
-    # the driver's synthetic lineitem is NOT keyed by (orderkey,
-    # linenumber) — duplicates exist — so the row id is a row number
-    # over the FULL column order: unique, and deterministic up to the
-    # interchange of fully-identical rows (which cannot affect any
-    # downstream multiset). Assigned via the range-partitioned two-phase
-    # numbering — no single-partition global window.
+    # The row id sorts like the oracle's ROW_NUMBER() over all 11
+    # lineitem columns, without a global numbering: (orderkey,
+    # linenumber) repeats up to 6 times in the driver's lineitem, so a
+    # row_number within each pair, ordered by the other 9 columns,
+    # breaks the ties, packed as ``l_orderkey << 16 | l_linenumber << 8
+    # | rank``. A hash window gives each row the same id on every
+    # execution and partition count. Rows equal in all 11 columns may
+    # swap ranks; they yield identical fact rows, so no output can tell.
     #
-    # Assigned AFTER the pipeline's ingest + month predicates, expressed
-    # here on the SOURCE columns (NOM_PLAN contains 'PGP' ⇔ l_orderkey %
-    # 13 ≠ 0; FACTURA starts 'SN' ⇔ l_orderkey % 17 = 0; FECHA_FACT =
-    # o_orderdate), so the row-id range shuffle + sample pass carry the
-    # ~8 % of rows the pipeline keeps instead of the full fact
-    # (optimization guide §2.3/§2.4 — r12 measured: the pre-filter fact
-    # build dropped ~1.4 s at sf0.1 and the biggest exchange shrank
-    # 13×). Row-id VALUES change under this order; only their ORDER is
-    # observable downstream (ORDER BY/keep-first tiebreaks; the id is
-    # never emitted), and filtering preserves relative order, so every
-    # declared result is bit-identical (oracle-audited at 3 SFs). The
-    # downstream ingest_filters/parse_and_filter_month re-apply the same
-    # predicates on the derived columns — idempotent on the kept rows.
-    from ..sources.readers import global_row_number
-
+    # Ingest + month predicates run first, on the SOURCE columns
+    # (NOM_PLAN contains 'PGP' ⇔ l_orderkey % 13 ≠ 0; FACTURA starts
+    # 'SN' ⇔ l_orderkey % 17 = 0; FECHA_FACT = o_orderdate), so the
+    # row-id shuffle carries only the ~8 % of rows the pipeline keeps
+    # (optimization guide §2.3/§2.4). They keep or drop whole orders, so
+    # no kept row's rank changes. The downstream ingest_filters/
+    # parse_and_filter_month re-apply them — idempotent on kept rows.
     li_cols = [
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
@@ -125,8 +122,25 @@ def sendas_inputs(
         & (F.col("l_orderkey") % 17 != 0)
         & (F.month("o_orderdate") == MES)
     )
-    j = global_row_number(j, li_cols, "__rid")
-    ok, ck = F.col("l_orderkey"), F.col("o_custkey")
+    # nulls last: the oracle's (DuckDB's) default ascending order
+    w = Window.partitionBy("l_orderkey", "l_linenumber").orderBy(
+        *[F.col(c).asc_nulls_last() for c in li_cols[2:]]
+    )
+    j = j.withColumn("__rank", F.row_number().over(w))
+    ok, ck = F.col("l_orderkey").cast("long"), F.col("o_custkey")
+    ln, rank = F.col("l_linenumber").cast("long"), F.col("__rank")
+    rid = F.when(
+        ok.between(0, (1 << 47) - 1) & ln.between(0, 255) & (rank < 256),
+        F.shiftleft(ok, 16).bitwiseOR(F.shiftleft(ln, 8)).bitwiseOR(rank),
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                "sendas_inputs: (l_orderkey, l_linenumber, rank) = (%s, %s, %s)"
+                " is outside the row id's bit budget (2^47, 2^8, 2^8)",
+                ok, ln, rank,
+            )
+        )
+    )
     pk, sk = F.col("l_partkey"), F.col("l_suppkey")
     factura = (
         F.when(ok % 17 == 0, F.concat(F.lit("SN"), ok.cast("string")))
@@ -142,7 +156,7 @@ def sendas_inputs(
         .otherwise((pk % 200).cast("string"))
     )
     fact = j.select(
-        F.col("__rid").cast("long").alias(ROW_ID),
+        rid.alias(ROW_ID),
         F.lit("SEDE A").alias("SEDE_NOMBRE"),
         factura.alias("FACTURA"),
         F.col("o_orderdate").alias("FECHA_FACT"),

@@ -14,10 +14,39 @@ let AQE coalesce from a high initial value).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def merge_conf(
+    env_conf: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The conf overrides :func:`get_spark` layers over its defaults.
+
+    ``env_conf`` is the ``SPARK_GRAFT_EXTRA_CONF`` value,
+    ``"k1=v1;k2=v2"``: deployment/experiment overrides without code
+    edits. Explicit ``extra_conf`` arguments win over it, and both win
+    over the built-in defaults. A non-empty pair with no ``=`` (say,
+    the tail of a value that itself contained ``;``) is skipped with a
+    warning rather than silently.
+    """
+    merged: dict[str, str] = {}
+    for pair in env_conf.split(";"):
+        if not pair.strip():
+            continue
+        k, sep, v = pair.partition("=")
+        if not sep or not k.strip():
+            warnings.warn(
+                f"SPARK_GRAFT_EXTRA_CONF: ignoring {pair!r} (expected key=value)",
+                stacklevel=2,
+            )
+            continue
+        merged[k.strip()] = v.strip()
+    merged.update(extra_conf or {})
+    return merged
 
 
 def get_spark(
@@ -70,18 +99,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    merged = merge_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""), extra_conf)
+    for k, v in merged.items():
         builder = builder.config(k, v)
-    # Deployment/experiment overrides without code edits:
-    # SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2" (last wins over defaults).
-    # Keeps scale-dependent settings parameterisable per environment —
-    # the bench contract reads its own knobs from env the same way.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in env_conf.split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            if k.strip():
-                builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

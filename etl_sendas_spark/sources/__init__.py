@@ -1,6 +1,5 @@
 from .readers import (
     read_table,
-    global_row_number,
     read_excel_dim,
     read_csv,
     with_row_id,
@@ -12,7 +11,6 @@ from .sinks import write_csv, write_excel, write_parquet
 
 __all__ = [
     "read_table",
-    "global_row_number",
     "read_excel_dim",
     "read_csv",
     "with_row_id",

@@ -58,62 +58,21 @@ def local_relation(
     return spark.createDataFrame(table, schema)
 
 
-def global_row_number(
-    df: DataFrame, order_by: Sequence[str], out_col: str = ROW_ID
-) -> DataFrame:
-    """Unique id, strictly increasing in ``order_by`` order, WITHOUT the
-    single-partition global window (which serializes the whole table
-    through one task — the one plan shape that cannot survive 100 TB).
-
-    Range-repartition on the sort key, then ``pid << 40 | local
-    row_number``: range partitioning makes partition id itself ordered
-    by the key, so the composite is ordered like a global row number —
-    just not contiguous, which nothing that consumes a row id (ORDER BY
-    tiebreaks, mark-join keys) can observe. One shuffle + local sort; no
-    count pass, no offset join. Ties across a range boundary get
-    arbitrary relative ids, so the sort key should be unique (or
-    duplicates interchangeable).
-
-    The ids are stable only within ONE execution (or one pin of the
-    result): the range partitioner seeds its boundary sample with the
-    RDD id, so two actions on the same frame can draw different
-    boundaries and hand the same row different ids. A consumer that
-    joins ids across branches must read them from a single pinned
-    frame — :func:`..plans.capital_sendas.run_pipeline` pins for this.
-    """
-    from pyspark.sql import Window
-
-    cols = [F.col(c) for c in order_by]
-    n = df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, *cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("__pid").orderBy(*cols)
-    return ranged.withColumn(
-        out_col,
-        (
-            F.col("__pid").cast("long") * F.lit(1 << 40).cast("long")
-            + F.row_number().over(w_local)
-        ),
-    ).drop("__pid")
-
-
-def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFrame:
-    """Attach the stable synthetic row id (SURVEY.md §1.4).
+def with_row_id(df: DataFrame) -> DataFrame:
+    """Attach the synthetic row id (SURVEY.md §1.4) by position.
 
     The reference's rule engine mutates by pandas row identity
     (``df.update`` / ``df.loc[idx]`` — capital_sendas.py:380,409,429,
     543,559). Spark rows have no identity, so every keep-first dedup
     and write-back in this engine threads this column instead.
 
-    With ``order_by`` the id is a deterministic global row number
-    (via :func:`global_row_number` — scale-safe, no single-partition
-    window); without, it is ``monotonically_increasing_id``
-    (deterministic per partition layout — fine when upstream is a
-    deterministic file scan, and needs no shuffle at all).
+    The id is ``monotonically_increasing_id``: no shuffle, ordered by
+    partition then by row within a partition. It is deterministic only
+    for a fixed file layout with no shuffle below it (a file scan, a
+    union of scans, a local relation); above a shuffle, each execution
+    may number the rows differently. Frames with a natural key derive
+    the id from the key instead (``sendas_inputs``).
     """
-    if order_by:
-        return global_row_number(df, order_by, ROW_ID)
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 
 
@@ -393,6 +352,12 @@ def load_fact_files(
     all-columns group, only rows from the *first* file ordinal that
     contains the group. One shuffle on a hash of all columns, same
     result, and each file's internal duplicates are preserved.
+
+    The result carries :data:`ROW_ID`, attached on the union BEFORE the
+    dedup shuffle (:func:`with_row_id`): ids follow the reference's
+    concat order — every row of file ``i`` below every row of file
+    ``i + 1``, file order within a file — and not the shuffle's fetch
+    order. The id is not part of the dedup key.
     """
     if not frames:
         raise ValueError("no input frames")
@@ -405,6 +370,7 @@ def load_fact_files(
     for fr in tagged[1:]:
         unioned = unioned.unionByName(fr)
     data_cols = [c for c in unioned.columns if c != "__file_ord"]
+    unioned = with_row_id(unioned)
 
     from pyspark.sql import Window
 

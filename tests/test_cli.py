@@ -419,3 +419,40 @@ def test_table_cli_constraints(spark, tmp_path, capsys):
         spark,
     )
     assert t.read(spark).count() == 21
+
+
+def test_make_rowgroups_refuses_dst_in_src(tmp_path):
+    """tools/make_rowgroups.py must refuse a destination that is the
+    source or lies inside it (also through a symlink), exit non-zero and
+    leave the source files byte-identical."""
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tool = os.path.join(repo, "tools", "make_rowgroups.py")
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.table({"x": list(range(100))}), src / "t.parquet")
+    before = {p.name: p.read_bytes() for p in src.iterdir()}
+    link = tmp_path / "link"
+    link.symlink_to(src)
+
+    for dst in (src, src / "out", src / ".." / "src", link / "out"):
+        r = subprocess.run(
+            [sys.executable, tool, str(src), str(dst), "4"],
+            capture_output=True, text=True,
+        )
+        assert r.returncode != 0, (dst, r.stdout)
+        assert "refusing" in r.stderr
+        assert {p.name: p.read_bytes() for p in src.iterdir()} == before
+
+    # a sibling destination still works
+    subprocess.run(
+        [sys.executable, tool, str(src), str(tmp_path / "dst"), "4"],
+        capture_output=True, text=True, check=True,
+    )
+    assert pq.ParquetFile(tmp_path / "dst" / "t.parquet").metadata.num_row_groups == 4
+    assert {p.name: p.read_bytes() for p in src.iterdir()} == before

@@ -34,7 +34,7 @@ from etl_sendas_spark.operators.similarity import (
     ivf_cosine_topk,
     lsh_cosine_topk,
 )
-from etl_sendas_spark.sources.readers import load_fact_files
+from etl_sendas_spark.sources.readers import ROW_ID, load_fact_files
 
 
 def _docs(spark):
@@ -734,12 +734,24 @@ def test_bucketed_join_plan_has_no_shuffle(spark):
 
 def test_load_fact_files_cross_file_dedup(spark):
     cols = ["k", "v"]
-    f0 = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b")], cols)
+    # file 0 out of value order, so id order ≠ value order
+    f0 = spark.createDataFrame([(2, "b"), (1, "a"), (1, "a")], cols)
     f1 = spark.createDataFrame([(1, "a"), (3, "c"), (3, "c")], cols)
-    out = sorted(tuple(r) for r in load_fact_files(spark, [f0, f1]).collect())
+    got = load_fact_files(spark, [f0, f1])
+    assert got.columns == ["k", "v", ROW_ID]
+    rows = sorted((r[ROW_ID], r["k"], r["v"]) for r in got.collect())
     # (1,a): file0's BOTH copies kept (within-file dups survive), file1's dropped.
     # (3,c): new in file1 → both its copies kept.
-    assert out == [(1, "a"), (1, "a"), (2, "b"), (3, "c"), (3, "c")]
+    assert sorted(r[1:] for r in rows) == [
+        (1, "a"), (1, "a"), (2, "b"), (3, "c"), (3, "c")
+    ]
+    # ids follow the reference's concat order: unique, every file-0 id
+    # below every file-1 id, file order kept within each file
+    ids = [r[0] for r in rows]
+    assert len(set(ids)) == len(ids)
+    assert [r[1:] for r in rows] == [
+        (2, "b"), (1, "a"), (1, "a"), (3, "c"), (3, "c")
+    ]
 
 
 def test_anti_join_all_columns_null_safe(spark):

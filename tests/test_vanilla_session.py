@@ -114,3 +114,29 @@ def test_sql_entry_point_matches_dataframe_api(spark):
         .collect()
     )
     assert sorted(map(tuple, via_sql)) == sorted(map(tuple, via_df))
+
+
+def test_merge_conf_precedence_and_malformed_pairs():
+    """Explicit ``extra_conf`` wins over ``SPARK_GRAFT_EXTRA_CONF``,
+    which wins over the built-in defaults (applied before both); a
+    non-empty pair without ``=`` is skipped with a warning."""
+    import warnings
+
+    from etl_sendas_spark.session import merge_conf
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert merge_conf("") == {}
+        assert merge_conf(" a = 1 ;; b=x=y;", {"c": "3"}) == {
+            "a": "1", "b": "x=y", "c": "3",
+        }
+        assert merge_conf("a=env;b=env", {"a": "arg"}) == {"a": "arg", "b": "env"}
+
+    # a value holding ';' is cut at it: the tail has no '=' and is
+    # reported instead of dropped silently
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = merge_conf("k=v1;v2;=orphan;j=2")
+    assert got == {"k": "v1", "j": "2"}
+    msgs = [str(w.message) for w in caught]
+    assert len(msgs) == 2 and "'v2'" in msgs[0] and "'=orphan'" in msgs[1], msgs

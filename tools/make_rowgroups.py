@@ -21,7 +21,9 @@ the boundaries bite, e.g.:
 
     SPARK_GRAFT_EXTRA_CONF="spark.sql.files.maxPartitionBytes=1048576"
 
-Never writes into the source directory (testdata is read-only).
+Never writes into the source directory: a ``dst`` that resolves to
+``src`` or to a path inside it is refused (exit 2) before anything is
+written.
 """
 
 from __future__ import annotations
@@ -33,9 +35,17 @@ import sys
 import pyarrow.parquet as pq
 
 
+def _inside(path: str, root: str) -> bool:
+    path, root = os.path.realpath(path), os.path.realpath(root)
+    return os.path.commonpath([path, root]) == root
+
+
 def main() -> int:
     src, dst = sys.argv[1], sys.argv[2]
     n_groups = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+    if _inside(dst, src):
+        print(f"refusing: {dst} is {src} or lies inside it", file=sys.stderr)
+        return 2
     os.makedirs(dst, exist_ok=True)
     for f in sorted(os.listdir(src)):
         if not f.endswith(".parquet"):
