@@ -15,8 +15,8 @@ is corpus-growth-sublinear (Heaps' law), never the corpus again. The
 one corpus-sized shuffle is the word count, and map-side combine
 collapses it to one row per distinct word per partition. Each
 iteration's global argmax is the algorithm's inherent synchronization
-point — a 1-row collect, same pattern as PageRank's convergence check
-(operators/graph.py).
+point — a 1-row collect, one tiny action per round like the
+connected-components fixpoint test (operators/dedupe.py).
 
 Encoding (applying trained merges back to the corpus) is scan-local:
 the merge list broadcasts inside an Arrow ``mapInPandas`` closure and

@@ -3,11 +3,19 @@
 The reference pipeline persists stage tables between phases by writing
 files to disk (``capital_sendas.py:600`` writes the phase output and
 later phases read it back). The Spark engine needs the same primitive —
-"cut the lineage, pin the intermediate" — at three places: the one
-enriched stage inside :func:`..plans.capital_sendas.run_pipeline`, the
-dedup pair outputs (:mod:`..operators.dedupe`), and each
-connected-components round. The right *mechanism* depends on where the
-job runs, so it is a strategy knob, not a hard-coded call:
+"cut the lineage, pin the intermediate". The pin sites are:
+
+- the one enriched stage inside
+  :func:`..plans.capital_sendas.run_pipeline`;
+- the dedup pair outputs, the prefix-filter token table and each
+  connected-components round (:mod:`..operators.dedupe`);
+- the IVF centroids and index probes, and the semantic-dedup centroids
+  and assignments (:mod:`..operators.similarity`);
+- the n-gram language-ID tables (:mod:`..functions.text`);
+- the order baskets of the ``a_association_rules`` query.
+
+The right *mechanism* depends on where the job runs, so it is a
+strategy knob, not a hard-coded call:
 
 - ``local`` — ``DataFrame.localCheckpoint(eager=True)``. Fastest: the
   materialized blocks live on executors and lineage is truncated. NOT

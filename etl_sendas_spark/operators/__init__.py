@@ -21,7 +21,6 @@ from .similarity import cosine_topk, ivf_cosine_topk, lsh_cosine_topk
 from .sampling import hash_bucket, stratified_sample
 from .multimodal import extract_features
 from .search import bm25_topk, phrase_match
-from .graph import pagerank, symmetrize, forest_roots
 from .sampling import weighted_sample_k
 
 __all__ = [
@@ -50,8 +49,5 @@ __all__ = [
     "extract_features",
     "bm25_topk",
     "phrase_match",
-    "pagerank",
-    "symmetrize",
-    "forest_roots",
     "weighted_sample_k",
 ]

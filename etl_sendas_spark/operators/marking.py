@@ -18,8 +18,9 @@ Two genuinely interesting operators live here:
   when it is more than ``gap_days`` after the LAST MARKED row (which
   resets the anchor). The anchor depends on prior marks — a stateful
   fold no window frame can express — so this is the engine's one
-  grouped-map pandas operator (Arrow-batched ``applyInPandas``; each
-  group is small, the shuffle key is the group key).
+  pandas fold (one shuffle on the group key, then an Arrow-batched
+  ``mapInPandas`` that carries the anchor across each partition's
+  sorted groups).
 
 - :func:`sessionize` — the window-expressible cousin (gap measured to
   the PREVIOUS row, not the last marked row): lag + cumulative sum.

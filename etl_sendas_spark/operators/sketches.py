@@ -1,656 +1,17 @@
-"""Mergeable cardinality sketches for partitioned rollups.
+"""Exact quantiles by histogram refinement: selection without a global sort.
 
-The 100 TB counting problem: "distinct users per day, and for any ad-hoc
-span of days" cannot be answered by exact ``COUNT(DISTINCT)`` without
-re-shuffling the raw data per question. The standard fix is a *mergeable
-sketch* per (key, partition): build once in the daily pipeline, store as
-a column, and answer any rollup by merging sketches — never re-touching
-the raw rows.
-
-Two implementations, complementary by design:
-
-* **KMV (k-minimum-values)** — deterministic and *engine-portable*: the
-  sketch is the k smallest distinct 60-bit md5 hashes, so a DuckDB /
-  ANSI-SQL oracle reproduces the sketch AND the estimate bit-for-bit
-  (the repo-wide oracle discipline). Merge is exact set-algebra: the k
-  smallest of a union of per-part k-smallest equals the k smallest of
-  the union — an identity `tests` verify literally. Estimator is the
-  classic unbiased (k-1)/U(k) of Bar-Yossef et al. (relative sd ≈
-  1/sqrt(k-2)).
-* **HLL (Apache DataSketches, built into Spark)** — the production path
-  at scale: fixed 2^lgk registers per sketch regardless of cardinality
-  (KMV needs k×8 bytes *after* a distinct pass; HLL's partial
-  aggregation is register-max, so the map side never holds per-value
-  state). Not cross-engine-reproducible, so it is property-tested
-  (tolerance + merge law) rather than oracle-hashed.
-
-Reference analog: the reference computes driver-side ``nunique`` calls
-(pandas) per dimension; these operators are the scale-true restatement.
+``percentile``-style aggregates sort the whole column (or hold it as
+per-group state). These operators instead narrow the value domain with
+``buckets``-way histograms — one bounded scan per pass — until the
+target order statistic's bucket is small enough to resolve with a
+bounded sort. Semantics match DuckDB's ``quantile_disc``: the 1-based
+order statistic k = max(1, ceil(q·n)), NULLs excluded, so the results
+are oracle-hashed exactly (``a_exact_quantile_histogram``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-
-from .dedupe import portable_hash60
-
-# 2^60 — the hash space of portable_hash60 (15 hex chars).
-_HASH_SPACE = float(1 << 60)
-
-
-def kmv_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: Column | str,
-    k: int = 256,
-    with_exact: bool = True,
-) -> DataFrame:
-    """Per-group KMV sketch: sorted array of the k smallest distinct
-    portable hashes of ``value_col`` (nulls excluded).
-
-    Plan shape: one distinct aggregation on (group, hash) — map-side
-    partial combine collapses in-partition duplicates before the only
-    shuffle — then a per-group ordered top-k.
-
-    ``with_exact`` (default) also emits ``n_exact``, the exact distinct
-    count per group, from the same distinct pass — the audit/parity
-    mode. It costs a full-partition count window, which BLOCKS Spark's
-    WindowGroupLimit pushdown: every distinct hash of a group crosses
-    the rank window. Pass ``with_exact=False`` at corpus scale — the
-    rank filter then compiles to a map-side group limit (plan-test
-    pinned), so each map partition ships at most k hashes per group and
-    a billion-distinct group costs the same shuffle as a small one
-    (if you wanted the exact count you would not be sketching).
-
-    Output: group_cols + ``kmv`` (array<long>, ascending) [+ ``n_exact``].
-    """
-    c = F.col(value_col) if isinstance(value_col, str) else value_col
-    hashed = (
-        df.select(*group_cols, portable_hash60(c.cast("string")).alias("hv"))
-        .filter(F.col("hv").isNotNull())
-        .distinct()
-    )
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    ranked = hashed.withColumn("rn", F.row_number().over(w))
-    if with_exact:
-        ranked = ranked.withColumn(
-            "n_exact", F.count("*").over(Window.partitionBy(*group_cols))
-        )
-        return (
-            ranked.filter(F.col("rn") <= k)
-            .groupBy(*group_cols, "n_exact")
-            .agg(F.sort_array(F.collect_list("hv")).alias("kmv"))
-            .select(*group_cols, "kmv", "n_exact")
-        )
-    return (
-        ranked.filter(F.col("rn") <= k)
-        .groupBy(*group_cols)
-        .agg(F.sort_array(F.collect_list("hv")).alias("kmv"))
-    )
-
-
-def kmv_merge(
-    df: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "kmv",
-    k: int = 256,
-) -> DataFrame:
-    """Merge per-part sketches to coarser groups (e.g. day → month, or
-    per-source → corpus): explode, distinct, keep the k smallest per new
-    group. Exact identity: equals :func:`kmv_sketch` run on the union of
-    the raw data, because each part retained *its* k smallest — any hash
-    in the true global k-minimum set survives in its part's sketch."""
-    exploded = (
-        df.select(*group_cols, F.explode(sketch_col).alias("hv")).distinct()
-    )
-    w = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(1))
-    ranked = exploded.withColumn("rn", F.row_number().over(w.orderBy("hv")))
-    agg_cols = group_cols if group_cols else []
-    out = (
-        ranked.filter(F.col("rn") <= k)
-        .groupBy(*agg_cols)
-        .agg(F.sort_array(F.collect_list("hv")).alias(sketch_col))
-    )
-    return out
-
-
-def kmv_estimate(sketch_col: Column | str, k: int = 256) -> Column:
-    """Distinct-count estimate from a KMV sketch column.
-
-    If the sketch holds fewer than k hashes the count is exact (every
-    distinct value is present). Otherwise the unbiased estimator
-    ``(k-1) * 2^60 / kth_min``; ``floor`` + cast keeps the arithmetic in
-    IEEE-exact ops (one multiply, one divide, one floor) so DuckDB
-    reproduces the integer estimate bit-for-bit."""
-    c = F.col(sketch_col) if isinstance(sketch_col, str) else sketch_col
-    kth = F.element_at(c, k).cast("double")
-    return F.when(F.size(c) < k, F.size(c).cast("long")).otherwise(
-        F.floor(F.lit(float(k - 1)) * F.lit(_HASH_SPACE) / kth).cast("long")
-    )
-
-
-def hll_rollup(
-    df: DataFrame,
-    part_cols: list[str],
-    rollup_cols: list[str],
-    value_col: Column | str,
-    lgk: int = 12,
-) -> DataFrame:
-    """Production-path distinct rollup: build one HLL sketch per
-    (rollup, part) group, then merge per rollup group — the shape a
-    daily pipeline persists (sketch column in the partition's parquet)
-    so month/quarter rollups never rescan raw data.
-
-    Uses Spark's built-in Apache DataSketches HLL (``hll_sketch_agg`` /
-    ``hll_union_agg``): fixed 2^lgk byte state per sketch, register-max
-    merge, partial-aggregable map-side. Returns rollup_cols +
-    ``n_parts`` + ``distinct_est``.
-    """
-    c = F.col(value_col) if isinstance(value_col, str) else value_col
-    per_part = df.groupBy(*(rollup_cols + part_cols)).agg(
-        F.hll_sketch_agg(c.cast("string"), F.lit(lgk)).alias("hll")
-    )
-    return per_part.groupBy(*rollup_cols).agg(
-        F.count("*").alias("n_parts"),
-        F.hll_sketch_estimate(F.hll_union_agg("hll")).alias("distinct_est"),
-    )
-
-
-def kmv_jaccard(
-    sketch_a: Column | str,
-    sketch_b: Column | str,
-    k: int = 256,
-) -> dict[str, Column]:
-    """Set algebra on two KMV sketches — similarity between whole
-    CORPORA (day-over-day overlap, source-vs-source contamination)
-    computed from the k-hash summaries alone, never rescanning either
-    side.
-
-    The k smallest hashes of A ∪ B are recoverable exactly from the two
-    sketches (k smallest of the concatenation); the fraction of them
-    present in BOTH sketches is the classic unbiased Jaccard estimator
-    (the same uniform-sample-of-the-union argument MinHash uses, so the
-    error envelope is ~1/sqrt(k)). Combined with the union-size
-    estimator this also yields |A ∩ B|. All ops are integer set algebra
-    plus one IEEE divide — engine-reproducible bit-for-bit.
-
-    Returns Columns: ``union_sketch`` (merged KMV, reusable downstream),
-    ``union_est``, ``inter_hits`` (raw count in [0, k]),
-    ``jaccard_est`` (rounded 6), ``intersection_est`` (floor of
-    jaccard * union).
-    """
-    a = F.col(sketch_a) if isinstance(sketch_a, str) else sketch_a
-    b = F.col(sketch_b) if isinstance(sketch_b, str) else sketch_b
-    merged = F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, k)
-    m_size = F.size(merged)
-    union_est = F.when(m_size < k, m_size.cast("long")).otherwise(
-        F.floor(
-            F.lit(float(k - 1)) * F.lit(_HASH_SPACE)
-            / F.element_at(merged, k).cast("double")
-        ).cast("long")
-    )
-    inter_hits = F.size(F.array_intersect(F.array_intersect(merged, a), b))
-    denom = F.least(F.lit(k), m_size).cast("double")
-    jaccard = F.round(inter_hits.cast("double") / denom, 6)
-    return {
-        "union_sketch": merged,
-        "union_est": union_est,
-        "inter_hits": inter_hits.cast("long"),
-        "jaccard_est": jaccard,
-        "intersection_est": F.floor(
-            inter_hits.cast("double") / denom * union_est.cast("double")
-        ).cast("long"),
-    }
-
-
-# ---------------------------------------------------------------------------
-# Count-Min: mergeable FREQUENCY sketch (the cardinality sketches above
-# answer "how many distinct"; CMS answers "how often is x" in fixed
-# space — heavy-hitter detection, spam/bot thresholds, join-size hints)
-# ---------------------------------------------------------------------------
-
-def _cms_bucket(value: Column, row: int, width: int) -> Column:
-    """Row-j bucket of a value: portable md5-60 of 'j:value' mod width —
-    deterministic and replayable in SQL, same discipline as KMV."""
-    return portable_hash60(
-        F.concat(F.lit(f"{row}:"), value.cast("string"))
-    ) % F.lit(width)
-
-
-def cms_sketch(
-    df: DataFrame,
-    value_col: Column | str,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Count-Min sketch of a value stream: ``depth`` independent hash
-    rows × ``width`` buckets, returned as ``(row, bucket, c)`` — at most
-    ``depth × width`` rows however large the input.
-
-    Plan: the input explodes ×depth (one (row, bucket) per hash row —
-    scan-local), then ONE groupBy((row, bucket)) whose map-side partial
-    aggregation caps per-task state at depth×width cells — the shuffle
-    carries at most ``tasks × depth × width`` pre-combined rows, never
-    the stream. Sketches over partitions of the data MERGE by adding
-    cell-wise (counts are linear) — the same build-once/roll-up-anywhere
-    contract as the KMV/HLL cardinality sketches above.
-
-    Estimates (:func:`cms_estimate`) are biased UP only — exact <= est
-    always; the overshoot per hash row has EXPECTED value
-    ``(N - exact)/width`` (the classic guarantee ``est <= exact +
-    e·N/width`` holds with probability ``1 - e^-depth``, not surely),
-    and the min over rows tightens it. Size width ≳ distinct-count for
-    near-exact heavy-hitter counts; the property tests pin the up-only
-    law, the mean overshoot, and exactness at generous width."""
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    rows = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(j).alias("row"),
-                _cms_bucket(v, j, width).alias("bucket"),
-            )
-            for j in range(depth)
-        ])
-    )
-    return (
-        df.select(rows.alias("rb"))
-        .groupBy(F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def cms_estimate(
-    sketch: DataFrame,
-    probes: DataFrame,
-    probe_col: str,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Point-frequency estimates for ``probes``: each probe value joins
-    its ``depth`` sketch cells (broadcast — the sketch is ≤ depth×width
-    rows by construction) and takes the MIN count; absent cells read 0.
-    Returns the probe frame plus ``cms_est``."""
-    v = F.col(probe_col)
-    cells = probes.select(
-        "*",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("row"),
-                    _cms_bucket(v, j, width).alias("bucket"),
-                )
-                for j in range(depth)
-            ])
-        ).alias("rb"),
-    ).select("*", F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
-    joined = cells.join(F.broadcast(sketch), ["row", "bucket"], "left")
-    probe_cols = [c for c in probes.columns]
-    return (
-        joined.groupBy(*probe_cols)
-        .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias("cms_est"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Portable Bloom filter — the shuffle-free semi-join prefilter
-# ---------------------------------------------------------------------------
-
-def _bloom_hashes(value: Column, k_hashes: int, m_bits: int) -> list[Column]:
-    """k bit positions by Kirsch–Mitzenmacher double hashing:
-    p_i = (h1 + i·h2) mod m, with h1/h2 two independent 60-bit halves
-    of one md5 — both replayable in DuckDB as
-    ``('0x' || substr(md5(x), <off>, 15))::BIGINT``. Safe in signed
-    64-bit: h1 + (k-1)·h2 < k·2^60, so k <= 7."""
-    if not 1 <= k_hashes <= 7:
-        raise ValueError("bloom: k_hashes must be in [1, 7]")
-    s = value.cast("string")
-    h1 = F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(s), 16, 15), 16, 10).cast("long")
-    return [(h1 + F.lit(i) * h2) % F.lit(m_bits) for i in range(k_hashes)]
-
-
-def bloom_build(
-    df: DataFrame,
-    value_col: Column | str,
-    m_words: int = 1024,
-    k_hashes: int = 3,
-) -> DataFrame:
-    """Build a portable Bloom filter over a column: ``(w, bits)`` rows,
-    one per non-empty 63-bit word (word ``w`` covers bit positions
-    ``[63w, 63w+63)``; 63-bit words keep every mask positive in signed
-    64-bit arithmetic on BOTH engines — no engine-specific shift
-    wraparound to reason about).
-
-    This is the at-rest, cross-job twin of Catalyst's runtime
-    bloom-filter join injection (plan-test-pinned elsewhere in this
-    repo): build the filter ONCE over the build side (one map-side
-    combinable bit_or aggregate, output <= m_words rows regardless of
-    input size), write it next to the table, and any later job
-    prefilters its probe side with NO join and NO shuffle — the classic
-    "does this doc_id exist in last year's corpus" gate before an
-    expensive exact dedup join. False positives at the standard
-    (1 - e^{-kn/m})^k rate; false negatives never (property-tested).
-    """
-    total_bits = 63 * m_words
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    pos = df.select(
-        F.explode(F.array(*_bloom_hashes(v, k_hashes, total_bits))).alias("p")
-    ).filter(F.col("p").isNotNull())  # NULL build value = no bits set (matches probe)
-    return (
-        pos.groupBy((F.col("p") / 63).cast("int").alias("w"))
-        .agg(
-            # pyspark's shiftleft() wrapper only takes a literal shift
-            # amount — the per-row shift must go through the SQL parser
-            F.expr(
-                "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 63 AS INT)))"
-            ).alias("bits")
-        )
-    )
-
-
-def bloom_filter_probe(
-    probes: DataFrame,
-    value_col: Column | str,
-    bloom: DataFrame,
-    m_words: int = 1024,
-    k_hashes: int = 3,
-    flag_col: str = "might_contain",
-) -> DataFrame:
-    """Tag every probe row with Bloom membership — ZERO shuffles on the
-    probe side: the filter table (<= m_words rows) broadcasts, and each
-    of the k bit tests is a broadcast hash join on the probe's computed
-    word index, so the whole test pipelines inside the probe scan. A
-    probe whose word is absent from the filter fails that bit test
-    (missing word = all-zero word). ``flag_col`` is 1 iff every one of
-    the k addressed bits is set.
-
-    The filter frame is pinned (strategy-pluggable) before fan-out:
-    each of the k broadcast joins reuses ONE materialized <=m_words-row
-    table instead of re-running the build aggregate k times."""
-    from ..materialize import materialize
-
-    total_bits = 63 * m_words
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    bloom = materialize(bloom, name="bloom_filter")
-    out = probes
-    flags = []
-    for i, p in enumerate(_bloom_hashes(v, k_hashes, total_bits)):
-        p_i, w_i, b_i = f"__p{i}", f"__w{i}", f"__bits{i}"
-        out = (
-            out.withColumn(p_i, p)
-            .withColumn(w_i, (F.col(p_i) / 63).cast("int"))
-            .join(
-                F.broadcast(
-                    bloom.select(F.col("w").alias(w_i), F.col("bits").alias(b_i))
-                ),
-                w_i,
-                "left",
-            )
-            .withColumn(
-                f"__f{i}",
-                # per-row shift amount -> SQL-parsed shiftright; the outer
-                # COALESCE catches a NULL probe value (NULL p_i would poison
-                # the flag product) so NULL probes read "not a member" (0),
-                # agreeing with the SQL oracle's CASE.
-                F.expr(
-                    f"COALESCE(CAST(shiftright(COALESCE({b_i}, CAST(0 AS BIGINT)),"
-                    f" CAST({p_i} % 63 AS INT)) & 1 AS INT), 0)"
-                ),
-            )
-            .drop(p_i, w_i, b_i)
-        )
-        flags.append(F.col(f"__f{i}"))
-    flag = flags[0]
-    for f in flags[1:]:
-        flag = flag * f
-    return out.withColumn(flag_col, flag).drop(*[f"__f{i}" for i in range(k_hashes)])
-
-
-# ---------------------------------------------------------------------------
-# Mergeable quantile sketch — bottom-k-by-row-hash uniform sample
-# ---------------------------------------------------------------------------
-
-def quantile_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: Column | str,
-    id_cols: list[str],
-    k: int = 256,
-) -> DataFrame:
-    """Per-group mergeable quantile sketch: the ``k`` rows with the
-    smallest portable row hashes, kept as ``array<struct<hv, v>>``
-    sorted by hash — the quantile member of the sketch family next to
-    KMV (cardinality) and Count-Min (frequency).
-
-    A bottom-k-by-hash sample is a uniform random sample with the SAME
-    exact merge law as KMV: the k smallest of a union equals the k
-    smallest over the parts' bottom-k's, because every hash in the true
-    global bottom-k survived in its part. So day-level sketches roll up
-    to month/corpus level without re-touching raw rows, and the whole
-    construction is deterministic and hash-replayable in SQL — unlike
-    t-digest/KLL whose merge is order-dependent. The price is accuracy:
-    rank error is O(1/sqrt(k)) (DKW bound on a uniform sample) versus
-    KLL's O(1/k) — the classic simplicity/accuracy trade, recorded
-    here deliberately.
-
-    ``id_cols`` must identify rows uniquely (the hash is the sampling
-    coin; hashing the VALUE would collapse duplicates and bias the
-    quantiles). Plan shape: slim (group, hv, v) projection, per-group
-    rank by hash — compiles to a map-side WindowGroupLimit exactly like
-    ``kmv_sketch(with_exact=False)``, so each map partition ships at
-    most k rows per group regardless of group size.
-    """
-    c = F.col(value_col) if isinstance(value_col, str) else value_col
-    hv = portable_hash60(
-        F.concat_ws("|", *[F.col(x).cast("string") for x in id_cols])
-    )
-    slim = df.select(
-        *group_cols, hv.alias("hv"), c.cast("double").alias("v")
-    ).filter(F.col("hv").isNotNull())
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    return (
-        slim.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .groupBy(*group_cols)
-        .agg(
-            F.sort_array(F.collect_list(F.struct("hv", "v"))).alias("qsk")
-        )
-    )
-
-
-def quantile_merge(
-    df: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "qsk",
-    k: int = 256,
-) -> DataFrame:
-    """Merge per-part quantile sketches to coarser groups. Exact
-    identity with re-sketching the union (see :func:`quantile_sketch`);
-    the distinct on (hv, v) makes the merge idempotent when parts
-    overlap."""
-    exploded = (
-        df.select(*group_cols, F.explode(sketch_col).alias("e"))
-        .select(*group_cols, F.col("e")["hv"].alias("hv"), F.col("e")["v"].alias("v"))
-        .distinct()
-    )
-    w = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(1))
-    return (
-        exploded.withColumn("rn", F.row_number().over(w.orderBy("hv")))
-        .filter(F.col("rn") <= k)
-        .groupBy(*group_cols)
-        .agg(F.sort_array(F.collect_list(F.struct("hv", "v"))).alias(sketch_col))
-    )
-
-
-def quantile_estimate(sketch_col: Column | str, q: float) -> Column:
-    """Nearest-rank quantile estimate from a sketch column: the sample
-    value at 1-based position ``floor(q*(n-1)) + 1`` of the
-    value-sorted sample — interpolation-free, so the estimate is an
-    actual data value and the SQL oracle reproduces it exactly."""
-    if not 0.0 <= q <= 1.0:
-        raise ValueError("quantile_estimate: q must be in [0, 1]")
-    c = F.col(sketch_col) if isinstance(sketch_col, str) else sketch_col
-    vals = F.sort_array(F.transform(c, lambda s: s["v"]))
-    idx = (F.floor(F.lit(q) * (F.size(vals) - 1)) + 1).cast("int")
-    return F.element_at(vals, idx)
-
-
-# ---------------------------------------------------------------------------
-# exact heavy hitters in two passes — Misra-Gries candidates, exact recount
-# ---------------------------------------------------------------------------
-
-# above this many candidate keys, pass 2 uses a broadcast join instead
-# of an IN-list literal (codegen bloat)
-_ISIN_CAP = 4096
-
-
-def heavy_hitters_exact(
-    df: DataFrame,
-    key_col: str,
-    threshold: float,
-    capacity: int | None = None,
-    route: str = "auto",
-    groupby_max_distinct: int = 10_000_000,
-) -> DataFrame:
-    """EXACT keys exceeding ``threshold`` fraction of rows, without the
-    full groupBy-every-key shuffle.
-
-    The 100 TB shape: a plain ``groupBy(key).count()`` shuffles one row
-    per DISTINCT key — at billions of keys the reduce side is the
-    bottleneck even though only a handful of keys can possibly exceed
-    θ·n. Two passes fix that:
-
-    1. **Candidates** (one scan, zero shuffle): per-partition weighted
-       Misra-Gries with ``capacity`` counters (default ceil(1/θ)) via
-       Arrow ``mapInPandas`` — each partition emits at most `capacity`
-       keys. Guarantee (pigeonhole + the MG decrement bound): a key
-       with global count > θ·n has local count > θ·n_p in at least one
-       partition, and MG's total undercount per partition is ≤
-       n_p/(capacity+1) ≤ θ·n_p, so every true heavy hitter survives
-       in some partition's candidate list. (False positives are fine —
-       the recount removes them.)
-    2. **Exact recount** (one scan, bounded shuffle): broadcast-join
-       the ≤ P·capacity candidate keys back onto the data; the groupBy
-       now shuffles only rows whose key is a candidate, with state
-       bounded by the candidate count, then keeps count > θ·n.
-
-    Output is exact and deterministic — (key, cnt, share) independent
-    of partitioning, Python batch order, or MG eviction order, because
-    pass 2 recounts exactly and the threshold test uses true counts.
-    NULL keys are excluded (a NULL key is "no key", mirroring the
-    engine-wide null-dimension policy).
-
-    Exactly two scans: each MG partition also emits its row count (a
-    NULL-key row), so n comes with the candidates instead of a third
-    counting pass; the sketch-sized candidate frame is collected and
-    pushed back as an ``isin`` literal — pass 2 is then a pure
-    filtered scan + tiny aggregate, no join at all (falls back to a
-    broadcast join above ``_ISIN_CAP`` candidates, where a giant IN
-    list would bloat codegen).
-
-    Routing (round 7 — the operator picks, the caller no longer has
-    to): BASELINE.md round 6 measured plain groupBy-HAVING beating the
-    two-pass Misra-Gries at EVERY single-box key cardinality (even 8M
-    distinct keys in 10M rows: 0.78 s vs 2.36 s — Tungsten's hash
-    aggregate + map-side combine absorb the key space in memory, while
-    MG pays an Arrow round-trip of the key column). The two-pass shape
-    is insurance for the cluster regime a single box cannot exhibit:
-    aggregation state (distinct keys × partial-agg entry) exceeding
-    executor memory. ``route="auto"`` therefore estimates the distinct
-    key count with one JVM-side ``approx_count_distinct`` scan (shared
-    with the total-count aggregate, so the groupBy route still touches
-    the data exactly twice) and takes plain groupBy-HAVING at or below
-    ``groupby_max_distinct`` (default 10M ≈ hundreds of MB of
-    hash-aggregate state, comfortably in-memory per executor), the
-    MG candidate pass above it. ``route="groupby"`` / ``route=
-    "misra_gries"`` force a path; output is identical either way
-    (both recount exactly; pytest pins route-equality on the same
-    oracle).
-    """
-    import math
-
-    import pandas as pd
-
-    if route not in ("auto", "groupby", "misra_gries"):
-        raise ValueError(f"heavy_hitters_exact: unknown route {route!r}")
-    k = capacity or max(2, math.ceil(1.0 / threshold))
-    data = df.select(F.col(key_col).alias("k")).filter(F.col("k").isNotNull())
-    key_type = data.schema["k"].dataType.simpleString()
-
-    if route != "misra_gries":
-        first = data.agg(
-            F.count("*").alias("n"), F.approx_count_distinct("k").alias("d")
-        ).collect()[0]
-        if route == "groupby" or int(first["d"]) <= groupby_max_distinct:
-            total = int(first["n"])
-            out = (
-                data.groupBy("k")
-                .count()
-                .filter(F.col("count") > F.lit(threshold) * F.lit(total))
-            )
-            return out.select(
-                F.col("k").alias(key_col),
-                F.col("count").alias("cnt"),
-                F.round(
-                    F.col("count") / F.lit(float(max(total, 1))), 6
-                ).alias("share"),
-            )
-
-    def mg_partition(batches):
-        counters: dict = {}
-        n_p = 0
-        for pdf in batches:
-            n_p += len(pdf)
-            for v, w in pdf["k"].value_counts().items():
-                counters[v] = counters.get(v, 0) + int(w)
-                if len(counters) > k:
-                    m = min(counters.values())
-                    counters = {
-                        key: c - m for key, c in counters.items() if c > m
-                    }
-        yield pd.DataFrame(
-            {"k": list(counters.keys()) + [None], "n_p": [None] * len(counters) + [n_p]}
-        )
-
-    sketch = data.mapInPandas(
-        mg_partition, schema=f"k {key_type}, n_p bigint"
-    ).collect()
-    total = sum(r["n_p"] for r in sketch if r["n_p"] is not None)
-    cand_keys = sorted({r["k"] for r in sketch if r["k"] is not None})
-    if not cand_keys or total == 0:
-        return (
-            data.limit(0)
-            .groupBy("k")
-            .count()
-            .select(
-                F.col("k").alias(key_col),
-                F.col("count").alias("cnt"),
-                F.lit(0.0).alias("share"),
-            )
-        )
-
-    if len(cand_keys) <= _ISIN_CAP:
-        hits = data.filter(F.col("k").isin(cand_keys))
-    else:
-        cands = data.sparkSession.createDataFrame(
-            [(c,) for c in cand_keys], schema=f"k {key_type}"
-        )
-        hits = data.join(F.broadcast(cands), on="k", how="inner")
-    out = (
-        hits.groupBy("k")
-        .count()
-        .filter(F.col("count") > F.lit(threshold) * F.lit(total))
-    )
-    return out.select(
-        F.col("k").alias(key_col),
-        F.col("count").alias("cnt"),
-        F.round(F.col("count") / F.lit(float(total)), 6).alias("share"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# exact quantile by histogram refinement — selection without a global sort
-# ---------------------------------------------------------------------------
+from pyspark.sql import DataFrame, functions as F
 
 
 def exact_quantile_histogram(

@@ -299,16 +299,18 @@ def rule_c1(fact: DataFrame) -> DataFrame:
     return update_by_row_id(fact, _c1_marks(fact), "validacion")
 
 
+SERVICIOS_A_INVALIDAR = ["890285", "890385", "890384", "890284", "890502"]
+
+
 def rule_c4(fact: DataFrame) -> DataFrame:
     """R4 Ambulatorio C4 (:431-456): CASE chain + invoice-membership
     zeroing; the 132P01 flag is a window over FACTURA (no self-join,
     no driver round-trip — replaces the reference's unique()+isin)."""
     has_132 = invoices_containing(fact, "FACTURA", "SERVICIO", "132P01")
     base = (F.col("AMBITO") == "CONSULTA EXTERNA") & (F.col("tipologia") == "C4")
-    servicios_a_invalidar = ["890285", "890385", "890384", "890284", "890502"]
     return fact.withColumn(
         "validacion",
-        F.when(base & has_132 & F.col("SERVICIO").isin(servicios_a_invalidar), F.lit(0))
+        F.when(base & has_132 & F.col("SERVICIO").isin(SERVICIOS_A_INVALIDAR), F.lit(0))
         .when(base & (F.col("SERVICIO") == "890502"), F.col("CANT_SERVICIO"))
         .when(base & (F.col("SERVICIO") != "890502"), F.lit(1))
         .otherwise(F.col("validacion")),
@@ -370,9 +372,6 @@ def _qx1_marks(fact: DataFrame) -> DataFrame:
     return first_flag(scope, keys=["FACTURA", "SERVICIO"]).select(
         ROW_ID, "validacion"
     )
-
-
-SERVICIOS_A_INVALIDAR = ["890285", "890385", "890384", "890284", "890502"]
 
 
 def _c4_zero_marks(fact: DataFrame) -> DataFrame:
@@ -480,10 +479,11 @@ def apply_rules(fact: DataFrame) -> DataFrame:
     only overwrite by fold position), unioned with its fold rank, and
     reduced to the highest-ranked mark per row; the pure-expression
     rules (R4/R5/R6/R9) interleave at their fold positions inside one
-    CASE. Physical shape: one shuffle for the (small, scoped) mark
-    union, ONE row-id join against the fact, and the FACTURA window for
-    the R4 invoice flag — versus the sequential fold's five full-fact
-    joins and 2^5 lineage copies.
+    CASE. R4's invoice zeroing is a mark set too (``_c4_zero_marks``, a
+    semi-join of narrow row ids against the 132P01 invoices). Physical
+    shape: one shuffle for the (small, scoped) mark union and ONE
+    row-id join against the fact — versus the sequential fold's five
+    full-fact joins and 2^5 lineage copies.
 
     Each mark set and the main pass read ``fact`` in separate branches
     and meet again on the row id, so its ids must be the same on every

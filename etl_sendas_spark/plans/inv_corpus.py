@@ -52,7 +52,6 @@ def _dec_sum(col, scale: int = 6):
     return F.sum(col.cast("decimal(18,6)")).cast("double")
 
 
-
 # ===========================================================================
 # text analysis / dedup / similarity (documents, embeddings)
 # ===========================================================================
@@ -1576,146 +1575,8 @@ GROUP BY ws
 
 
 # ===========================================================================
-# sketches / model scoring / quantization / JSONL interchange (round 4)
+# model scoring / quantization / JSONL interchange (round 4)
 # ===========================================================================
-
-def sketch_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable cardinality rollup via KMV sketches: one k=64 sketch
-    per (lang, source) part, merged per lang — the "distinct docs for
-    any span of parts without rescanning raw data" pattern. Every hash,
-    the merge, and the (k-1)/U(k) estimator are engine-portable md5 +
-    IEEE arithmetic, so the oracle reproduces the estimate exactly
-    (sketches built per part; merged-union < k ⇒ exact by construction,
-    since any capped part forces the union to ≥ k)."""
-    from ..operators.dedupe import portable_hash60
-    from ..operators.sketches import kmv_estimate, kmv_merge, kmv_sketch
-
-    k = 64
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("lang", "source", normalized_text(F.col("text")).alias("nt"))
-    )
-    parts = kmv_sketch(docs, ["lang", "source"], "nt", k=k)
-    merged = kmv_merge(parts, ["lang"], "kmv", k=k)
-    exact = (
-        docs.select("lang", portable_hash60(F.col("nt")).alias("hv"))
-        .distinct()
-        .groupBy("lang")
-        .agg(F.count("*").alias("exact_distinct"))
-    )
-    n_parts = parts.groupBy("lang").agg(F.count("*").alias("n_sources"))
-    return (
-        merged.select("lang", kmv_estimate("kmv", k=k).alias("kmv_estimate"))
-        .join(exact, "lang")
-        .join(n_parts, "lang")
-        .select("lang", "n_sources", "exact_distinct", "kmv_estimate")
-    )
-
-
-_KMV_HASH = f"('0x' || substr(md5({_NORM_SQL}), 1, 15))::BIGINT"
-
-SKETCH_KMV_SQL = f"""
-WITH h AS (
-  SELECT DISTINCT lang, source, {_KMV_HASH} AS hv
-  FROM documents WHERE text IS NOT NULL
-), part AS (
-  SELECT lang, source, hv,
-         row_number() OVER (PARTITION BY lang, source ORDER BY hv) AS rn
-  FROM h
-), sk AS (SELECT lang, source, hv FROM part WHERE rn <= 64),
-m AS (SELECT DISTINCT lang, hv FROM sk),
-mr AS (
-  SELECT lang, hv,
-         row_number() OVER (PARTITION BY lang ORDER BY hv) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS msize
-  FROM m
-)
-SELECT mr.lang,
-       (SELECT COUNT(DISTINCT source) FROM h WHERE h.lang = mr.lang) AS n_sources,
-       (SELECT COUNT(*) FROM (SELECT DISTINCT hv FROM h WHERE h.lang = mr.lang)) AS exact_distinct,
-       CASE WHEN MAX(msize) < 64 THEN MAX(msize)
-            ELSE CAST(FLOOR(63.0 * 1152921504606846976.0
-                            / MAX(CASE WHEN rn = 64 THEN hv END)) AS BIGINT)
-       END AS kmv_estimate
-FROM mr GROUP BY mr.lang
-"""
-
-
-def sketch_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-vs-corpus overlap from sketches alone (day-over-day
-    contamination check at 100 TB: neither side rescanned): KMV
-    sketches of the even-id and odd-id document halves, then union /
-    intersection / Jaccard estimated with exact integer set algebra on
-    the two k-hash summaries. Engine-reproducible bit-for-bit."""
-    from ..operators.sketches import kmv_jaccard, kmv_sketch
-
-    k = 128
-    halves = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            (F.col("doc_id") % 2).alias("half"),
-            normalized_text(F.col("text")).alias("nt"),
-        )
-    )
-    sk = kmv_sketch(halves, ["half"], "nt", k=k)
-    a = sk.filter(F.col("half") == 0).select(
-        F.col("kmv").alias("ka"), F.col("n_exact").alias("n_even")
-    )
-    b = sk.filter(F.col("half") == 1).select(
-        F.col("kmv").alias("kb"), F.col("n_exact").alias("n_odd")
-    )
-    c = kmv_jaccard("ka", "kb", k=k)
-    return (
-        a.crossJoin(b)
-        .select(
-            "n_even",
-            "n_odd",
-            c["union_est"].alias("union_est"),
-            c["inter_hits"].alias("inter_hits"),
-            c["jaccard_est"].alias("jaccard_est"),
-            c["intersection_est"].alias("intersection_est"),
-        )
-    )
-
-
-SKETCH_OVERLAP_SQL = f"""
-WITH h AS (
-  SELECT DISTINCT doc_id % 2 AS half, {_KMV_HASH} AS hv
-  FROM documents WHERE text IS NOT NULL
-), r AS (
-  SELECT half, hv,
-         row_number() OVER (PARTITION BY half ORDER BY hv) AS rn,
-         COUNT(*) OVER (PARTITION BY half) AS cnt
-  FROM h
-), sk AS (
-  SELECT half, list_sort(list(hv)) AS kmv, MAX(cnt) AS n_exact
-  FROM r WHERE rn <= 128 GROUP BY half
-), ab AS (
-  SELECT (SELECT kmv FROM sk WHERE half = 0) AS ka,
-         (SELECT n_exact FROM sk WHERE half = 0) AS n_even,
-         (SELECT kmv FROM sk WHERE half = 1) AS kb,
-         (SELECT n_exact FROM sk WHERE half = 1) AS n_odd
-), m AS (
-  SELECT n_even, n_odd, ka, kb,
-         list_slice(list_sort(list_distinct(list_concat(ka, kb))), 1, 128) AS merged
-  FROM ab
-), e AS (
-  SELECT n_even, n_odd,
-         CASE WHEN len(merged) < 128 THEN len(merged)
-              ELSE CAST(FLOOR(127.0 * 1152921504606846976.0 / merged[128]) AS BIGINT)
-         END AS union_est,
-         CAST(len(list_intersect(list_intersect(merged, ka), kb)) AS BIGINT) AS inter_hits,
-         LEAST(128, len(merged)) AS denom
-  FROM m
-)
-SELECT n_even, n_odd, union_est, inter_hits,
-       ROUND(CAST(inter_hits AS DOUBLE) / denom, 6) AS jaccard_est,
-       CAST(FLOOR(CAST(inter_hits AS DOUBLE) / denom * CAST(union_est AS DOUBLE)) AS BIGINT)
-         AS intersection_est
-FROM e
-"""
 
 
 def quality_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2012,5 +1873,3 @@ SELECT source,
 FROM documents
 GROUP BY source
 """
-
-

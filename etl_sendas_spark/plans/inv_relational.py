@@ -1418,7 +1418,7 @@ FROM s4
 def r7_gap_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R7 anchor-reset gap fold on events: per (user, type) in ts order,
     mark first, then only >3 days after the last marked (reference
-    :484-543). The one applyInPandas operator; oracle is a recursive CTE."""
+    :484-543). The one mapInPandas fold; oracle is a recursive CTE."""
     ev = _t(spark, sf_dir, "events", widen=False).select("event_id", "user_id", "event_type", "ts")
     marked = gap_anchor_mark(
         ev,

@@ -16,7 +16,6 @@ from ..functions.text import (
     PII_PATTERNS,
     doc_fingerprint,
     lang_id,
-    normalized_text,
     pii_counts,
     pii_redact,
     quality_features,
@@ -50,7 +49,6 @@ def _dec_sum(col, scale: int = 6):
     """Order-insensitive exact sum: cast each term to DECIMAL, sum, back
     to double. DuckDB mirror: SUM(CAST(x AS DECIMAL(18,6)))::DOUBLE."""
     return F.sum(col.cast("decimal(18,6)")).cast("double")
-
 
 
 from .inv_relational import *  # noqa: F401,F403 — earlier sections' helpers
@@ -206,139 +204,6 @@ PART_QUERIES["ivm_minmax_incremental"] = ivm_minmax_incremental
 PART_ORACLES["ivm_minmax_incremental"] = IVM_MINMAX_SQL
 
 
-def sketch_cms_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min frequency sketch over the corpus token stream
-    (operators/sketches.cms_sketch, depth 4 × width 1024 — ≤4096 cells
-    whatever the corpus size), probed at the exact top-20 tokens:
-    output (token, exact_n, cms_est). The estimate is biased up only
-    (cms_est >= exact_n always — collisions add, never subtract), and
-    because the hash rows are the portable md5-60 family the ORACLE
-    replays the whole sketch — build, probe, min-over-rows — in plain
-    SQL: the estimates must match cell-for-cell, not just
-    approximately."""
-    from ..operators.sketches import cms_estimate, cms_sketch
-
-    toks = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.explode(
-                F.filter(
-                    F.split(normalized_text(F.col("text")), " "),
-                    lambda t: t != "",
-                )
-            ).alias("tok")
-        )
-    )
-    sketch = cms_sketch(toks, "tok", depth=4, width=1024)
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.col("exact_n").desc(), F.col("tok"))
-        .limit(20)
-    )
-    est = cms_estimate(sketch, top, "tok", depth=4, width=1024)
-    return est.select("tok", "exact_n", F.col("cms_est").cast("long").alias("cms_est"))
-
-
-CMS_HEAVY_SQL = """
-WITH toks AS (
-  SELECT unnest(list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                x -> x != '')) AS tok
-  FROM documents WHERE text IS NOT NULL
-), sketch AS (
-  SELECT j AS row,
-         ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || tok), 1, 15))::BIGINT % 1024 AS bucket,
-         COUNT(*) AS c
-  FROM toks, LATERAL unnest(generate_series(0, 3)) AS u(j)
-  GROUP BY 1, 2
-), top AS (
-  SELECT tok, COUNT(*) AS exact_n
-  FROM toks GROUP BY tok
-  ORDER BY exact_n DESC, tok LIMIT 20
-), probe AS (
-  SELECT t.tok, t.exact_n, j AS row,
-         ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || t.tok), 1, 15))::BIGINT % 1024 AS bucket
-  FROM top t, LATERAL unnest(generate_series(0, 3)) AS u(j)
-)
-SELECT p.tok, p.exact_n, CAST(MIN(COALESCE(s.c, 0)) AS BIGINT) AS cms_est
-FROM probe p LEFT JOIN sketch s USING (row, bucket)
-GROUP BY p.tok, p.exact_n
-"""
-
-PART_QUERIES["sketch_cms_heavy_tokens"] = sketch_cms_heavy_tokens
-PART_ORACLES["sketch_cms_heavy_tokens"] = CMS_HEAVY_SQL
-
-
-def graph_hits_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS over the DIRECTED customer→supplier trading graph (an edge
-    per distinct pair from orders × lineitem): hubs are the buying
-    side, authorities the selling side — the bipartite structure
-    PageRank's single score conflates, and the reason the graph ladder
-    has this third rung (operators/graph.hits: per iteration one
-    edge⨝hub + dst agg and one edge⨝authority + src agg, L1
-    normalization, round-12 per iteration so the oracle's unrolled
-    CTEs replay bit-for-bit). 3 iterations; final scores round to 6."""
-    from ..operators.graph import hits
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    out = hits(e0, iterations=3)
-    return out.select(
-        "node",
-        F.round("hub", 6).alias("hub"),
-        F.round("authority", 6).alias("authority"),
-    )
-
-
-def _hits_oracle_sql(iterations: int = 3) -> str:
-    head = """WITH e AS (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-), nodes AS (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), n AS (SELECT COUNT(*) AS n_nodes FROM nodes),
-h0 AS (SELECT node, 1.0 / n_nodes AS h FROM nodes, n)"""
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f""",
-ar{i} AS (
-  SELECT e.dst AS node, SUM(h.h) AS v
-  FROM e JOIN h{i - 1} h ON h.node = e.src GROUP BY e.dst
-),
-a{i} AS (
-  SELECT nodes.node,
-         ROUND(COALESCE(r.v, 0) / (SELECT SUM(v) FROM ar{i}), 12) AS a
-  FROM nodes LEFT JOIN ar{i} r ON r.node = nodes.node
-),
-hr{i} AS (
-  SELECT e.src AS node, SUM(a.a) AS v
-  FROM e JOIN a{i} a ON a.node = e.dst GROUP BY e.src
-),
-h{i} AS (
-  SELECT nodes.node,
-         ROUND(COALESCE(r.v, 0) / (SELECT SUM(v) FROM hr{i}), 12) AS h
-  FROM nodes LEFT JOIN hr{i} r ON r.node = nodes.node
-)""")
-    tail = f"""
-SELECT h.node, ROUND(h.h, 6) AS hub, ROUND(a.a, 6) AS authority
-FROM h{iterations} h JOIN a{iterations} a ON a.node = h.node"""
-    return head + "".join(steps) + tail
-
-
-PART_QUERIES["graph_hits_entities"] = graph_hits_entities
-PART_ORACLES["graph_hits_entities"] = _hits_oracle_sql(3)
-
-
 def dedup_cluster_star_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same pair→cluster contract as ``dedup_cluster_docs`` but
     closed with ALTERNATING large-star/small-star rounds
@@ -368,148 +233,6 @@ def dedup_cluster_star_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PART_QUERIES["dedup_cluster_star_docs"] = dedup_cluster_star_docs
 PART_ORACLES["dedup_cluster_star_docs"] = DEDUP_CLUSTER_SQL
-
-
-def stat_group_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user activity trend: OLS of event value on event time
-    (seconds since 2024-01-01) in one aggregation
-    (operators/timeseries.group_ols) — slope/intercept/R² from exact
-    decimal sufficient statistics, so the ORACLE's identical
-    closed-form arithmetic matches bit-for-bit after rounding (float
-    enters only AFTER the sums are exact; x is floor-epoch seconds in
-    both engines). Slope rounds to 12 (per-second trends are tiny),
-    intercept and R² to 6."""
-    from ..operators.timeseries import group_ols
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    base = ev.select(
-        "user_id",
-        (F.unix_timestamp("ts") - F.lit(1704067200)).alias("x"),
-        F.col("value").alias("y"),
-    )
-    out = group_ols(base, ["user_id"], "x", "y")
-    return out.select(
-        "user_id",
-        "n",
-        F.round("slope", 12).alias("slope"),
-        F.round("intercept", 6).alias("intercept"),
-        F.round("r2", 6).alias("r2"),
-    )
-
-
-GROUP_REGRESSION_SQL = """
-WITH b AS (
-  SELECT user_id,
-         CAST(CAST(floor(epoch(ts)) AS BIGINT) - 1704067200 AS DECIMAL(28,6)) AS x,
-         CAST(value AS DECIMAL(28,6)) AS y
-  FROM events WHERE value IS NOT NULL
-), s AS (
-  SELECT user_id, COUNT(*) AS n,
-         SUM(x) AS sx, SUM(y) AS sy,
-         SUM(CAST(x * y AS DECIMAL(38,12))) AS sxy,
-         SUM(CAST(x * x AS DECIMAL(38,12))) AS sxx,
-         SUM(CAST(y * y AS DECIMAL(38,12))) AS syy
-  FROM b GROUP BY user_id
-), d AS (
-  SELECT user_id, n,
-         CAST(n AS DOUBLE) AS nd,
-         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-         CAST(sxy AS DOUBLE) AS sxyd, CAST(sxx AS DOUBLE) AS sxxd,
-         CAST(syy AS DOUBLE) AS syyd
-  FROM s
-)
-SELECT user_id, CAST(n AS BIGINT) AS n,
-       ROUND((nd * sxyd - sxd * syd) / NULLIF(nd * sxxd - sxd * sxd, 0), 12) AS slope,
-       ROUND((syd - ((nd * sxyd - sxd * syd) / NULLIF(nd * sxxd - sxd * sxd, 0)) * sxd) / nd, 6) AS intercept,
-       ROUND((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
-             / NULLIF((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd), 0), 6) AS r2
-FROM d
-"""
-
-PART_QUERIES["stat_group_regression"] = stat_group_regression
-PART_ORACLES["stat_group_regression"] = GROUP_REGRESSION_SQL
-
-
-def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch MAINTAINED ON A STREAM: the sketch is a plain
-    (row, bucket) counter aggregation, so it runs as a streaming
-    groupBy in complete mode with state bounded at depth×width cells
-    REGARDLESS of stream length — the frequency-sketch analog of the
-    streaming matview, and the reason CMS is the right heavy-hitter
-    structure for unbounded feeds (exact per-key counts would grow
-    state with the key universe). The streamed sketch is then probed
-    batch-side at the exact top-10 users; the ORACLE rebuilds sketch
-    and probes from the same rows in SQL — streamed and batch cells
-    must agree exactly (counts are linear; micro-batching cannot
-    change a sum)."""
-    from ..operators.sketches import cms_estimate
-    from ..streaming.sessions import run_stream_to_memory
-
-    depth, width = 4, 1024
-    stream = _stream_events(spark, sf_dir).select(
-        F.col("user_id").cast("string").alias("uid")
-    )
-    cells = stream.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("row"),
-                    (
-                        F.conv(
-                            F.substring(
-                                F.md5(F.concat(F.lit(f"{j}:"), F.col("uid"))),
-                                1, 15,
-                            ), 16, 10,
-                        ).cast("long") % width
-                    ).alias("bucket"),
-                )
-                for j in range(depth)
-            ])
-        ).alias("rb")
-    ).groupBy(
-        F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    run_stream_to_memory(cells, "cms_user_cells", output_mode="complete")
-    sketch = spark.table("cms_user_cells")
-
-    top = (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.col("user_id").cast("string").alias("uid"))
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.col("exact_n").desc(), F.col("uid"))
-        .limit(10)
-    )
-    est = cms_estimate(sketch, top, "uid", depth=depth, width=width)
-    return est.select(
-        "uid", "exact_n", F.col("cms_est").cast("long").alias("cms_est")
-    )
-
-
-STREAM_CMS_SQL = """
-WITH ev AS (
-  SELECT CAST(user_id AS VARCHAR) AS uid FROM events
-), sketch AS (
-  SELECT j AS row,
-         ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || uid), 1, 15))::BIGINT % 1024 AS bucket,
-         COUNT(*) AS c
-  FROM ev, LATERAL unnest(generate_series(0, 3)) AS u(j)
-  GROUP BY 1, 2
-), top AS (
-  SELECT uid, COUNT(*) AS exact_n
-  FROM ev GROUP BY uid
-  ORDER BY exact_n DESC, uid LIMIT 10
-), probe AS (
-  SELECT t.uid, t.exact_n, j AS row,
-         ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || t.uid), 1, 15))::BIGINT % 1024 AS bucket
-  FROM top t, LATERAL unnest(generate_series(0, 3)) AS u(j)
-)
-SELECT p.uid, p.exact_n, CAST(MIN(COALESCE(s.c, 0)) AS BIGINT) AS cms_est
-FROM probe p LEFT JOIN sketch s USING (row, bucket)
-GROUP BY p.uid, p.exact_n
-"""
-
-PART_QUERIES["streaming_cms_user_counts"] = streaming_cms_user_counts
-PART_ORACLES["streaming_cms_user_counts"] = STREAM_CMS_SQL
 
 
 def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,66 +746,6 @@ PART_QUERIES["scalar_url_canonicalize"] = scalar_url_canonicalize
 PART_ORACLES["scalar_url_canonicalize"] = SCALAR_URL_SQL
 
 
-def graph_pagerank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the customer<->supplier affinity graph (an edge
-    per distinct trading pair from orders x lineitem, symmetrized), 5
-    iterations, d=0.85 — the link-structure quality prior of a web
-    pipeline, exercised on the graph this schema actually contains.
-    Each iteration is one edge-vs-rank join + one dst aggregation
-    (operators/graph.py pins edges/ranks via the pluggable
-    materializer, so lineage is O(1) in iterations). The oracle unrolls
-    the same five iterations as chained CTEs; both engines round only
-    the final vector."""
-    from ..operators.graph import pagerank, symmetrize
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    pr = pagerank(symmetrize(e0), iterations=5, damping=0.85)
-    return pr.select("node", F.round("pagerank", 6).alias("pagerank"))
-
-
-def _pagerank_oracle_sql(iterations: int = 5) -> str:
-    head = """WITH e0 AS (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-), edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
-n AS (SELECT COUNT(*) AS n_nodes FROM nodes),
-r0 AS (SELECT node, 1.0 / n_nodes AS r FROM nodes, n)"""
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f""",
-c{i} AS (
-  SELECT e.dst AS node, SUM(r.r / d.outdeg) AS c
-  FROM edges e
-  JOIN r{i - 1} r ON r.node = e.src
-  JOIN deg d ON d.src = e.src
-  GROUP BY e.dst
-), r{i} AS (
-  SELECT nd.node,
-         (1.0 - 0.85) / n.n_nodes + 0.85 * COALESCE(c{i}.c, 0.0) AS r
-  FROM nodes nd CROSS JOIN n LEFT JOIN c{i} ON c{i}.node = nd.node
-)""")
-    tail = f"\nSELECT node, ROUND(r, 6) AS pagerank FROM r{iterations}"
-    return head + "".join(steps) + tail
-
-
-GRAPH_PAGERANK_SQL = _pagerank_oracle_sql(5)
-
-PART_QUERIES["graph_pagerank_entities"] = graph_pagerank_entities
-PART_ORACLES["graph_pagerank_entities"] = GRAPH_PAGERANK_SQL
-
-
 def sample_weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis-Spirakis
     exponential clocks, hash-derandomized): 50 docs drawn with
@@ -1221,50 +884,6 @@ WHERE view_id IS NOT NULL OR ts + INTERVAL 1 HOUR < wm.w
 
 PART_QUERIES["streaming_interval_left_join"] = streaming_interval_left_join
 PART_ORACLES["streaming_interval_left_join"] = STREAM_INTERVAL_LEFT_JOIN_SQL
-
-
-def hierarchy_roots_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchy flattening by POINTER DOUBLING (operators/graph.py):
-    root + depth for every node of a synthetic document forest
-    (parent(d) = d // 3; d % 89 == 0 and d = 0 are roots — parent < id
-    guarantees acyclicity). O(log depth) self-join rounds instead of
-    the O(depth) sequential walk of the oracle's recursive CTE — the
-    org-chart / BOM / category-tree shape at corpus scale."""
-    from ..operators.graph import forest_roots
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"),
-        F.when(
-            (F.col("doc_id") == 0) | (F.col("doc_id") % 89 == 0),
-            F.lit(None).cast("long"),
-        )
-        .otherwise((F.col("doc_id") / 3).cast("long"))
-        .alias("parent"),
-    )
-    return forest_roots(docs, "id", "parent").select(
-        F.col("id").alias("doc_id"), "root", "depth"
-    )
-
-
-HIERARCHY_ROOTS_SQL = """
-WITH RECURSIVE t AS (
-  SELECT doc_id AS id,
-         CASE WHEN doc_id = 0 OR doc_id % 89 = 0 THEN NULL
-              ELSE CAST(doc_id // 3 AS BIGINT) END AS parent
-  FROM documents
-),
-climb AS (
-  SELECT id AS start, id AS node, parent, 0 AS depth FROM t
-  UNION ALL
-  SELECT c.start, t.id AS node, t.parent, c.depth + 1
-  FROM climb c JOIN t ON t.id = c.parent
-)
-SELECT start AS doc_id, node AS root, depth
-FROM climb WHERE parent IS NULL
-"""
-
-PART_QUERIES["hierarchy_roots_docs"] = hierarchy_roots_docs
-PART_ORACLES["hierarchy_roots_docs"] = HIERARCHY_ROOTS_SQL
 
 
 def a_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1436,45 +1055,6 @@ PART_QUERIES["u_union_schema_evolution"] = u_union_schema_evolution
 PART_ORACLES["u_union_schema_evolution"] = U_SCHEMA_EVOLUTION_SQL
 
 
-def ts_ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user EWMA of event values (alpha=0.3), event-ordered — the
-    smoothing recurrence (y depends on the previous OUTPUT) no window
-    function expresses; runs as the same one-shuffle Arrow grouped
-    fold as the R7 gap mark (operators/timeseries.py). The oracle
-    replays the literal recurrence as a recursive CTE; both engines
-    execute the identical float ops in the identical order, rounded
-    at 6 for the hash."""
-    from ..operators.timeseries import ewma
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    out = ewma(ev, ["user_id"], ["ts", "event_id"], "value", alpha=0.3)
-    return out.select(
-        "user_id", "event_id", F.round("ewma", 6).alias("ewma")
-    )
-
-
-TS_EWMA_SQL = """
-WITH RECURSIVE s AS (
-  SELECT user_id, event_id, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-), rec AS (
-  SELECT user_id, event_id, value, rn, CAST(value AS DOUBLE) AS y
-  FROM s WHERE rn = 1
-  UNION ALL
-  SELECT s.user_id, s.event_id, s.value, s.rn,
-         (1.0 - 0.3) * r.y + 0.3 * s.value
-  FROM rec r JOIN s ON s.user_id = r.user_id AND s.rn = r.rn + 1
-)
-SELECT user_id, event_id, ROUND(y, 6) AS ewma FROM rec
-"""
-
-PART_QUERIES["ts_ewma_user_values"] = ts_ewma_user_values
-PART_ORACLES["ts_ewma_user_values"] = TS_EWMA_SQL
-
-
 def a_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel (view -> click -> purchase, each step
     within 7 days of the previous) WITHOUT self-joins: two window
@@ -1587,156 +1167,9 @@ PART_QUERIES["embedding_class_prototypes"] = embedding_class_prototypes
 PART_ORACLES["embedding_class_prototypes"] = EMB_PROTOTYPES_SQL
 
 
-def dq_expectation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality expectation suite over lineitem
-    (operators/quality_checks.py): five declarative rules — null
-    check, accepted-values domain, numeric range, compound-key
-    uniqueness, referential integrity to orders — fused into ONE
-    aggregate over ONE scan of the fact (uniqueness via
-    count(*) - count(DISTINCT struct(keys)) in the same agg, the FK
-    check via a broadcast left join stacked under it), so the whole
-    suite is a single Spark job however many rules it holds. The
-    report row set IS the quarantine/alert input; the oracle
-    recomputes each count in plain SQL."""
-    from ..operators.quality_checks import expectation_report
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    rules = [
-        {"rule": "not_null", "col": "l_orderkey"},
-        {"rule": "in_set", "col": "l_returnflag", "values": ["A", "N", "R"]},
-        {"rule": "in_range", "col": "l_discount", "lo": 0.0, "hi": 0.05},
-        {"rule": "unique", "cols": ["l_orderkey", "l_linenumber"]},
-        {
-            "rule": "foreign_key",
-            "col": "l_orderkey",
-            "ref": orders,
-            "ref_col": "o_orderkey",
-        },
-    ]
-    return expectation_report(li, rules)
-
-
-DQ_REPORT_SQL = """
-WITH n AS (SELECT COUNT(*) AS n_rows FROM lineitem),
-checks AS (
-  SELECT 'not_null' AS rule, 'l_orderkey' AS target,
-         (SELECT COUNT(*) FROM lineitem WHERE l_orderkey IS NULL) AS violations
-  UNION ALL
-  SELECT 'in_set', 'l_returnflag',
-         (SELECT COUNT(*) FROM lineitem
-          WHERE l_returnflag IS NOT NULL
-            AND l_returnflag NOT IN ('A', 'N', 'R'))
-  UNION ALL
-  SELECT 'in_range', 'l_discount',
-         (SELECT COUNT(*) FROM lineitem
-          WHERE l_discount IS NOT NULL
-            AND (l_discount < 0.0 OR l_discount > 0.05))
-  UNION ALL
-  SELECT 'unique', 'l_orderkey,l_linenumber',
-         (SELECT COALESCE(SUM(c - 1), 0) FROM (
-            SELECT COUNT(*) AS c FROM lineitem
-            GROUP BY l_orderkey, l_linenumber))
-  UNION ALL
-  SELECT 'foreign_key', 'l_orderkey',
-         (SELECT COUNT(*) FROM lineitem l
-          WHERE l.l_orderkey IS NOT NULL
-            AND NOT EXISTS (SELECT 1 FROM orders o
-                            WHERE o.o_orderkey = l.l_orderkey))
-)
-SELECT rule, target, CAST(violations AS BIGINT) AS violations,
-       CAST(n.n_rows AS BIGINT) AS n_rows, violations = 0 AS passed
-FROM checks, n
-"""
-
-PART_QUERIES["dq_expectation_report"] = dq_expectation_report
-PART_ORACLES["dq_expectation_report"] = DQ_REPORT_SQL
-
-
-_PPR_SEEDS = [("c1", 0.5), ("c2", 0.25), ("c3", 0.25)]
-
-
-def graph_ppr_related(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank: mass teleports back to a 3-customer seed
-    set, so the stationary weights rank SUPPLIERS by trading proximity
-    to those customers — the 'related items' recommendation query,
-    same per-iteration cost as global PageRank (the seed frame is one
-    broadcast join at setup). Top-20 suppliers, ranked after
-    rounding."""
-    from ..operators.graph import pagerank, symmetrize
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    seeds = spark.createDataFrame(_PPR_SEEDS, "node STRING, weight DOUBLE")
-    pr = pagerank(symmetrize(e0), iterations=5, damping=0.85, reset=seeds)
-    sup = pr.filter(F.col("node").startswith("s")).select(
-        "node", F.round("pagerank", 6).alias("pagerank")
-    )
-    w = Window.orderBy(F.col("pagerank").desc(), F.col("node"))
-    return (
-        sup.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 20)
-    )
-
-
-def _ppr_oracle_sql(iterations: int, seeds: list[tuple[str, float]]) -> str:
-    seed_values = ", ".join(f"('{n}', {w})" for n, w in seeds)
-    head = f"""WITH e0 AS (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-), edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
-rs(node, w) AS (VALUES {seed_values}),
-r0 AS (
-  SELECT n.node, COALESCE(rs.w, 0.0) AS r
-  FROM nodes n LEFT JOIN rs ON rs.node = n.node
-)"""
-    steps = []
-    for i in range(1, iterations + 1):
-        steps.append(f""",
-c{i} AS (
-  SELECT e.dst AS node, SUM(r.r / d.outdeg) AS c
-  FROM edges e
-  JOIN r{i - 1} r ON r.node = e.src
-  JOIN deg d ON d.src = e.src
-  GROUP BY e.dst
-), r{i} AS (
-  SELECT nd.node,
-         (1.0 - 0.85) * COALESCE(rs.w, 0.0)
-         + 0.85 * COALESCE(c{i}.c, 0.0) AS r
-  FROM nodes nd
-  LEFT JOIN rs ON rs.node = nd.node
-  LEFT JOIN c{i} ON c{i}.node = nd.node
-)""")
-    tail = f"""
-SELECT node, pagerank, rank FROM (
-  SELECT node, ROUND(r, 6) AS pagerank,
-         CAST(ROW_NUMBER() OVER (ORDER BY ROUND(r, 6) DESC, node) AS INT)
-           AS rank
-  FROM r{iterations} WHERE node LIKE 's%'
-) WHERE rank <= 20"""
-    return head + "".join(steps) + tail
-
-
-GRAPH_PPR_SQL = _ppr_oracle_sql(5, _PPR_SEEDS)
-
-PART_QUERIES["graph_ppr_related"] = graph_ppr_related
-PART_ORACLES["graph_ppr_related"] = GRAPH_PPR_SQL
-
-
 def w_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-row median of value per user (robust smoothing —
-    the outlier-immune counterpart of the EWMA): the interpolated
+    """Trailing-7-row median of value per user (outlier-immune
+    smoothing): the interpolated
     percentile aggregate evaluated over a bounded ROWS window, keyed
     and ordered like every per-user window here (one user-hash
     exchange; the frame is 7 rows, so per-row cost is O(frame), not
@@ -1956,5 +1389,3 @@ PART_QUERIES["o_topk_with_ties"] = o_topk_with_ties
 PART_ORACLES["o_topk_with_ties"] = O_TOPK_TIES_SQL
 PART_QUERIES["video_frame_sample_mjpeg"] = video_frame_sample_mjpeg
 PART_ORACLES["video_frame_sample_mjpeg"] = VIDEO_FRAME_SQL
-
-

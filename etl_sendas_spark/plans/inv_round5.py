@@ -52,17 +52,13 @@ def _dec_sum(col, scale: int = 6):
     return F.sum(col.cast("decimal(18,6)")).cast("double")
 
 
-
 from .inv_relational import *  # noqa: F401,F403 — earlier sections' helpers
 from .inv_corpus import *  # noqa: F401,F403 — earlier sections' helpers
 from .inv_round4 import *  # noqa: F401,F403 — earlier sections' helpers
 
 # Queries registered by THIS module; plans.inventory merges them
 # into the global EXTRA registries after the base literals.
-from .inv_corpus import (  # noqa: E402 — underscore helpers star-import skips
-    _TOKS_SQL,
-    _stream_events,
-)
+from .inv_corpus import _TOKS_SQL  # noqa: E402 — underscore helpers star-import skips
 from .inv_round4 import (  # noqa: E402 — underscore helpers star-import skips
     _BM25_QS_VALUES,
     _BM25_QUERIES,
@@ -615,205 +611,6 @@ PART_QUERIES["quality_lm_perplexity"] = quality_lm_perplexity
 PART_ORACLES["quality_lm_perplexity"] = QUALITY_LM_SQL
 
 
-def j_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable Bloom-filter semi-join prefilter
-    (operators/sketches.bloom_build/bloom_filter_probe): the urgent
-    orders' keys compress into a 64512-bit filter (<=1024 rows), and
-    every distinct lineitem orderkey is tagged with membership by
-    broadcast bit tests — no shuffle touches the probe side. ~0.2%
-    false positives at this load factor (measured 30 of 11813
-    non-members at sf0.01), zero false negatives by construction — the
-    cross-job, at-rest twin of Catalyst's runtime bloom injection.
-
-    ORACLE: ``J_BLOOM_SQL`` rebuilds the identical filter (same md5
-    double-hashing, same 63-bit words) and replays every bit test, so
-    the hash covers the exact false-positive set, not just counts."""
-    from ..operators.sketches import bloom_build, bloom_filter_probe
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    bloom = bloom_build(
-        orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-            "o_orderkey"
-        ).distinct(),
-        "o_orderkey",
-        m_words=1024,
-        k_hashes=3,
-    )
-    probes = li.select("l_orderkey").distinct()
-    return bloom_filter_probe(
-        probes, "l_orderkey", bloom, m_words=1024, k_hashes=3
-    )
-
-
-J_BLOOM_SQL = """
-WITH build AS (
-  SELECT DISTINCT o_orderkey AS v FROM orders WHERE o_orderpriority = '1-URGENT'
-),
-bh AS (
-  SELECT v,
-         ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15))::BIGINT AS h1,
-         ('0x' || substr(md5(CAST(v AS VARCHAR)), 16, 15))::BIGINT AS h2
-  FROM build
-),
-bpos AS (
-  SELECT ((h1 + i * h2) % 64512) AS p FROM bh, UNNEST([0, 1, 2]) AS t(i)
-),
-bloom AS (
-  SELECT CAST(p // 63 AS INT) AS w, bit_or(1::BIGINT << CAST(p % 63 AS INT)) AS bits
-  FROM bpos GROUP BY 1
-),
-probes AS (SELECT DISTINCT l_orderkey AS v FROM lineitem),
-ph AS (
-  SELECT v,
-         ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15))::BIGINT AS h1,
-         ('0x' || substr(md5(CAST(v AS VARCHAR)), 16, 15))::BIGINT AS h2
-  FROM probes
-),
-ppos AS (
-  SELECT v, ((h1 + i * h2) % 64512) AS p FROM ph, UNNEST([0, 1, 2]) AS t(i)
-),
-ptest AS (
-  SELECT ppos.v,
-         CASE WHEN (COALESCE(b.bits, 0) >> CAST(p % 63 AS INT)) & 1 = 1
-              THEN 1 ELSE 0 END AS f
-  FROM ppos LEFT JOIN bloom b ON b.w = CAST(p // 63 AS INT)
-)
-SELECT v AS l_orderkey, CAST(MIN(f) AS INT) AS might_contain
-FROM ptest GROUP BY 1
-"""
-
-PART_QUERIES["j_bloom_prefilter"] = j_bloom_prefilter
-PART_ORACLES["j_bloom_prefilter"] = J_BLOOM_SQL
-
-
-def sketch_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable quantile sketch (operators/sketches.quantile_sketch):
-    per-returnflag bottom-256-by-row-hash sample of l_extendedprice,
-    nearest-rank p50/p90/p99 estimates — the quantile member of the
-    sketch family (KMV = cardinality, CMS = frequency). The sample
-    rides the same exact merge law as KMV, so day-level sketches roll
-    up without re-touching raw rows; rank error O(1/sqrt(k)) is
-    property-tested against the exact percentiles.
-
-    ORACLE: ``SKETCH_QUANTILES_SQL`` replays the identical row hashes,
-    the identical bottom-k cut, and the identical nearest-rank pick, so
-    the estimates match bit-for-bit."""
-    from ..operators.sketches import quantile_estimate, quantile_sketch
-
-    li = _t(spark, sf_dir, "lineitem")
-    sk = quantile_sketch(
-        li,
-        ["l_returnflag"],
-        "l_extendedprice",
-        id_cols=["l_orderkey", "l_linenumber"],
-        k=256,
-    )
-    return sk.select(
-        "l_returnflag",
-        F.size("qsk").alias("n_sample"),
-        quantile_estimate("qsk", 0.5).alias("p50"),
-        quantile_estimate("qsk", 0.9).alias("p90"),
-        quantile_estimate("qsk", 0.99).alias("p99"),
-    )
-
-
-SKETCH_QUANTILES_SQL = """
-WITH s AS (
-  SELECT l_returnflag,
-         ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '|' ||
-                             CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT AS hv,
-         CAST(l_extendedprice AS DOUBLE) AS v
-  FROM lineitem
-), r AS (
-  SELECT l_returnflag, v,
-         ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY hv) AS rn
-  FROM s
-), smp AS (
-  SELECT l_returnflag, v FROM r WHERE rn <= 256
-), o AS (
-  SELECT l_returnflag, v,
-         ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY v) - 1 AS i,
-         COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-  FROM smp
-)
-SELECT l_returnflag,
-       CAST(MAX(n) AS INT) AS n_sample,
-       MAX(CASE WHEN i = CAST(FLOOR(0.5  * (n - 1)) AS BIGINT) THEN v END) AS p50,
-       MAX(CASE WHEN i = CAST(FLOOR(0.9  * (n - 1)) AS BIGINT) THEN v END) AS p90,
-       MAX(CASE WHEN i = CAST(FLOOR(0.99 * (n - 1)) AS BIGINT) THEN v END) AS p99
-FROM o GROUP BY 1
-"""
-
-PART_QUERIES["sketch_quantiles_price"] = sketch_quantiles_price
-PART_ORACLES["sketch_quantiles_price"] = SKETCH_QUANTILES_SQL
-
-
-def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quantile sketch maintained on a stream
-    (streaming/sessions.quantile_sketch_stream): per event_type,
-    GroupState holds exactly the bottom-128 (row-hash, value) pairs —
-    fixed-size state on an unbounded feed. The bottom-k cut is
-    order-insensitive, so micro-batching cannot change the sample: the
-    streamed sketch equals the batch sketch bit-for-bit and the ORACLE
-    replays hashes, cut, count, and nearest-rank estimates exactly from
-    the same rows in SQL."""
-    from ..streaming.sessions import quantile_sketch_stream, run_stream_to_memory
-
-    stream = _stream_events(spark, sf_dir).select("event_type", "event_id", "value")
-    sk = quantile_sketch_stream(
-        stream, group_col="event_type", value_col="value", id_col="event_id", k=128
-    )
-    run_stream_to_memory(sk, "quantile_sketch_stream", output_mode="update")
-    snap = spark.table("quantile_sketch_stream")
-    w = Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
-    final = snap.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    vals = F.sort_array(F.col("vs"))
-    p = lambda q: F.element_at(  # noqa: E731 — nearest-rank pick, same as batch
-        vals, (F.floor(F.lit(q) * (F.size(vals) - 1)) + 1).cast("int")
-    )
-    return final.select(
-        "event_type",
-        "n_seen",
-        F.size("vs").alias("n_sample"),
-        p(0.5).alias("p50"),
-        p(0.9).alias("p90"),
-    )
-
-
-STREAM_QUANTILES_SQL = """
-WITH s AS (
-  SELECT event_type,
-         ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT AS hv,
-         CAST(value AS DOUBLE) AS v
-  FROM events
-), r AS (
-  SELECT event_type, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-  FROM s
-), smp AS (
-  SELECT event_type, v FROM r WHERE rn <= 128
-), o AS (
-  SELECT event_type, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v) - 1 AS i,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM smp
-), tot AS (
-  SELECT event_type, COUNT(*) AS n_seen FROM s GROUP BY 1
-)
-SELECT o.event_type,
-       MAX(t.n_seen) AS n_seen,
-       CAST(MAX(o.n) AS INT) AS n_sample,
-       MAX(CASE WHEN o.i = CAST(FLOOR(0.5 * (o.n - 1)) AS BIGINT) THEN o.v END) AS p50,
-       MAX(CASE WHEN o.i = CAST(FLOOR(0.9 * (o.n - 1)) AS BIGINT) THEN o.v END) AS p90
-FROM o JOIN tot t USING (event_type)
-GROUP BY 1
-"""
-
-PART_QUERIES["streaming_quantile_sketch"] = streaming_quantile_sketch
-PART_ORACLES["streaming_quantile_sketch"] = STREAM_QUANTILES_SQL
-
-
 def a_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules over order baskets (basket =
     distinct parts on one order): frequent pairs at min_support 3, both
@@ -934,78 +731,6 @@ PART_QUERIES["a_association_rules"] = a_association_rules
 PART_ORACLES["a_association_rules"] = A_ASSOC_RULES_SQL
 
 
-def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts (operators/graph.triangle_counts,
-    degree-oriented compact-forward) on the part co-purchase graph —
-    edges between parts co-ordered in ≥2 baskets (the same graph the
-    association rules mine; 3445 edges / 61 triangles at sf0.01).
-    Local closure is the community/quality signal PageRank's global
-    rank cannot see.
-
-    ORACLE: ``GRAPH_TRIANGLES_SQL`` replays canonicalization, degrees,
-    the (deg, id) orientation, the wedge join, and the membership
-    check."""
-    from ..operators.graph import triangle_counts
-
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    e = (
-        b.select("bk", F.col("it").alias("src"))
-        .join(b.select("bk", F.col("it").alias("dst")), "bk")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("s"))
-        .filter(F.col("s") >= 2)
-        .select("src", "dst")
-    )
-    return triangle_counts(e)
-
-
-GRAPH_TRIANGLES_SQL = """
-WITH b AS (
-  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
-),
-canon AS (
-  SELECT a.it AS a, c.it AS b
-  FROM b a JOIN b c ON a.bk = c.bk AND a.it < c.it
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= 2
-),
-deg AS (
-  SELECT node, COUNT(*) AS deg FROM (
-    SELECT a AS node FROM canon UNION ALL SELECT b AS node FROM canon
-  ) GROUP BY 1
-),
-fwd AS (
-  SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.a ELSE c.b END AS u,
-         CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.b ELSE c.a END AS v
-  FROM canon c
-  JOIN deg da ON da.node = c.a
-  JOIN deg db ON db.node = c.b
-),
-wedges AS (
-  SELECT e1.u, e1.v AS x, e2.v AS y
-  FROM fwd e1 JOIN fwd e2 ON e1.u = e2.u AND e1.v < e2.v
-),
-tris AS (
-  SELECT w.u, w.x, w.y
-  FROM wedges w JOIN canon c ON c.a = w.x AND c.b = w.y
-)
-SELECT node, COUNT(*) AS triangles FROM (
-  SELECT u AS node FROM tris
-  UNION ALL SELECT x FROM tris
-  UNION ALL SELECT y FROM tris
-) GROUP BY 1
-"""
-
-PART_QUERIES["graph_triangle_counts"] = graph_triangle_counts
-PART_ORACLES["graph_triangle_counts"] = GRAPH_TRIANGLES_SQL
-
-
 def a_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout: users are hash-bucketed into two arms
     (portable md5 of user_id, mod 2 — exactly how production
@@ -1084,84 +809,6 @@ PART_QUERIES["a_ab_test_readout"] = a_ab_test_readout
 PART_ORACLES["a_ab_test_readout"] = A_AB_TEST_SQL
 
 
-def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-derandomized uniform random walks
-    (operators/graph.random_walks): a 4-step walk from every node of
-    the customer<->supplier entity graph — the DeepWalk/node2vec
-    corpus-generation stage, with every step's neighbor pick
-    md5-derandomized so the ORACLE replays all four hops node-for-node
-    (``GRAPH_WALKS_SQL`` unrolls the steps as chained CTEs against the
-    same rank-indexed adjacency)."""
-    from ..operators.graph import random_walks
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    return random_walks(e0, length=4, seed=17)
-
-
-GRAPH_WALKS_SQL = """
-WITH e0 AS (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-),
-und AS (
-  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-),
-adj AS (
-  SELECT src, dst,
-         ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx
-  FROM und
-),
-deg AS (SELECT src, COUNT(*) AS deg FROM und GROUP BY 1),
-s0 AS (SELECT DISTINCT src AS walk_id, src AS cur FROM und),
-s1 AS (
-  SELECT w.walk_id, a.dst AS cur
-  FROM s0 w
-  JOIN deg d ON d.src = w.cur
-  JOIN adj a ON a.src = w.cur
-   AND a.idx = ('0x' || substr(md5(w.walk_id || '#17#0'), 1, 15))::BIGINT % d.deg
-),
-s2 AS (
-  SELECT w.walk_id, a.dst AS cur
-  FROM s1 w
-  JOIN deg d ON d.src = w.cur
-  JOIN adj a ON a.src = w.cur
-   AND a.idx = ('0x' || substr(md5(w.walk_id || '#17#1'), 1, 15))::BIGINT % d.deg
-),
-s3 AS (
-  SELECT w.walk_id, a.dst AS cur
-  FROM s2 w
-  JOIN deg d ON d.src = w.cur
-  JOIN adj a ON a.src = w.cur
-   AND a.idx = ('0x' || substr(md5(w.walk_id || '#17#2'), 1, 15))::BIGINT % d.deg
-),
-s4 AS (
-  SELECT w.walk_id, a.dst AS cur
-  FROM s3 w
-  JOIN deg d ON d.src = w.cur
-  JOIN adj a ON a.src = w.cur
-   AND a.idx = ('0x' || substr(md5(w.walk_id || '#17#3'), 1, 15))::BIGINT % d.deg
-)
-SELECT walk_id, 0 AS step, cur AS node FROM s0
-UNION ALL SELECT walk_id, 1, cur FROM s1
-UNION ALL SELECT walk_id, 2, cur FROM s2
-UNION ALL SELECT walk_id, 3, cur FROM s3
-UNION ALL SELECT walk_id, 4, cur FROM s4
-"""
-
-PART_QUERIES["graph_random_walks"] = graph_random_walks
-PART_ORACLES["graph_random_walks"] = GRAPH_WALKS_SQL
-
-
 def sample_group_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split of the corpus
     (operators/sampling.group_split): the split decision is keyed on a
@@ -1217,79 +864,6 @@ FROM assigned GROUP BY split ORDER BY split
 
 PART_QUERIES["sample_group_split_docs"] = sample_group_split_docs
 PART_ORACLES["sample_group_split_docs"] = SAMPLE_GROUP_SPLIT_SQL
-
-
-def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift monitor (operators/quality_checks.psi_drift):
-    PSI of the event value distribution, second half of January vs the
-    first, per event_type — the null-calibration deployment (iid halves
-    must read PSI ≈ 0; the operator's property test plants real drift
-    and reads it back > 0.25). Bin edges freeze from the REFERENCE
-    window's min/max (one tiny eager aggregate — the deployed pattern,
-    so the monitor itself cannot drift), counts are exact one-scan
-    aggregates per side, and +0.5 Laplace smoothing keeps empty bins
-    finite and the whole statistic ANSI-replayable.
-
-    ORACLE: ``DQ_PSI_DRIFT_SQL`` replays the split, the frozen edges,
-    the clamped equi-width binning, smoothing, and the PSI sum."""
-    from ..operators.quality_checks import psi_drift
-
-    ev = _t(spark, sf_dir, "events")
-    mid = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    ref = ev.filter(F.col("ts") < mid)
-    cur = ev.filter(F.col("ts") >= mid)
-    return psi_drift(ref, cur, "value", ["event_type"]).orderBy("event_type")
-
-
-DQ_PSI_DRIFT_SQL = """
-WITH ref AS (
-  SELECT event_type, value FROM events
-  WHERE ts < TIMESTAMP '2024-01-16 00:00:00' AND value IS NOT NULL
-),
-cur AS (
-  SELECT event_type, value FROM events
-  WHERE ts >= TIMESTAMP '2024-01-16 00:00:00' AND value IS NOT NULL
-),
-edges AS (SELECT MIN(value) AS lo, MAX(value) AS hi FROM ref),
-rb AS (
-  SELECT event_type,
-         GREATEST(0, LEAST(9, CAST(FLOOR((value - e.lo) / (e.hi - e.lo) * 10)
-                                   AS BIGINT))) AS bin,
-         COUNT(*) AS n_ref
-  FROM ref, edges e GROUP BY 1, 2
-),
-cb AS (
-  SELECT event_type,
-         GREATEST(0, LEAST(9, CAST(FLOOR((value - e.lo) / (e.hi - e.lo) * 10)
-                                   AS BIGINT))) AS bin,
-         COUNT(*) AS n_cur
-  FROM cur, edges e GROUP BY 1, 2
-),
-j AS (
-  SELECT COALESCE(rb.event_type, cb.event_type) AS event_type,
-         COALESCE(rb.bin, cb.bin) AS bin,
-         COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
-  FROM rb FULL OUTER JOIN cb
-    ON rb.event_type = cb.event_type AND rb.bin = cb.bin
-),
-terms AS (
-  SELECT event_type, n_ref, n_cur,
-         ((n_cur + 0.5) / (SUM(n_cur) OVER (PARTITION BY event_type) + 5.0)
-          - (n_ref + 0.5) / (SUM(n_ref) OVER (PARTITION BY event_type) + 5.0))
-         * LN(((n_cur + 0.5) / (SUM(n_cur) OVER (PARTITION BY event_type) + 5.0))
-              / ((n_ref + 0.5) / (SUM(n_ref) OVER (PARTITION BY event_type) + 5.0)))
-         AS term
-  FROM j
-)
-SELECT event_type, ROUND(SUM(term), 6) AS psi,
-       CAST(SUM(n_ref) AS BIGINT) AS n_ref, CAST(SUM(n_cur) AS BIGINT) AS n_cur
-FROM terms GROUP BY event_type ORDER BY event_type
-"""
-
-PART_QUERIES["dq_psi_drift"] = dq_psi_drift
-PART_ORACLES["dq_psi_drift"] = DQ_PSI_DRIFT_SQL
-
-
 
 
 # ===========================================================================
@@ -1351,121 +925,3 @@ WHERE ROUND(i / (sa + sb - i), 6) >= 0.9
 
 PART_QUERIES["dedup_prefix_jaccard_docs"] = dedup_prefix_jaccard_docs
 PART_ORACLES["dedup_prefix_jaccard_docs"] = DEDUP_PREFIX_JACCARD_SQL
-
-
-# ===========================================================================
-# round 6: ordered funnel analysis (first-touch, strict ordering)
-# ===========================================================================
-
-def a_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four-step ordered funnel view → click → signup → purchase over
-    the event feed with a 1-day first-touch window
-    (operators/timeseries.funnel_steps): step k counts users whose
-    earliest valid step-k event strictly follows their matched step-k-1
-    event, all inside 1 day of the user's FIRST view (first-touch
-    anchoring — the standard product-analytics convention, and the
-    property that makes the chain greedy-exact and SQL-replayable).
-
-    ORACLE: ``A_FUNNEL_SQL`` replays the same chained earliest-match
-    CTEs, so the driver hash covers the ordering/deadline logic."""
-    from ..operators.timeseries import funnel_steps
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel_steps(
-        ev, steps=["view", "click", "signup", "purchase"],
-        user_col="user_id", ts_col="ts", type_col="event_type",
-        within="1 day",
-    )
-
-
-A_FUNNEL_SQL = """
-WITH s1 AS (
-  SELECT user_id AS u, MIN(ts) AS t
-  FROM events WHERE event_type = 'view' AND ts IS NOT NULL GROUP BY 1
-), s1d AS (
-  SELECT u, t, t + INTERVAL 1 DAY AS deadline FROM s1
-), s2 AS (
-  SELECT e.user_id AS u, MIN(e.ts) AS t, ANY_VALUE(r.deadline) AS deadline
-  FROM events e JOIN s1d r ON e.user_id = r.u
-  WHERE e.event_type = 'click' AND e.ts > r.t AND e.ts <= r.deadline
-  GROUP BY 1
-), s3 AS (
-  SELECT e.user_id AS u, MIN(e.ts) AS t, ANY_VALUE(r.deadline) AS deadline
-  FROM events e JOIN s2 r ON e.user_id = r.u
-  WHERE e.event_type = 'signup' AND e.ts > r.t AND e.ts <= r.deadline
-  GROUP BY 1
-), s4 AS (
-  SELECT e.user_id AS u, MIN(e.ts) AS t
-  FROM events e JOIN s3 r ON e.user_id = r.u
-  WHERE e.event_type = 'purchase' AND e.ts > r.t AND e.ts <= r.deadline
-  GROUP BY 1
-), counts(step_idx, step, n_users) AS (
-  SELECT 1, 'view', (SELECT COUNT(*) FROM s1)
-  UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
-  UNION ALL SELECT 3, 'signup', (SELECT COUNT(*) FROM s3)
-  UNION ALL SELECT 4, 'purchase', (SELECT COUNT(*) FROM s4)
-)
-SELECT CAST(step_idx AS INTEGER) AS step_idx, step,
-       CAST(n_users AS BIGINT) AS n_users,
-       ROUND(n_users / (SELECT COUNT(*) FROM s1), 6) AS conversion
-FROM counts
-WHERE (SELECT COUNT(*) FROM s1) > 0
-"""
-
-PART_QUERIES["a_funnel_conversion"] = a_funnel_conversion
-PART_ORACLES["a_funnel_conversion"] = A_FUNNEL_SQL
-
-
-def dq_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type two-sample KS drift between the first and second
-    half-month of the event feed (operators/quality_checks.ks_drift) —
-    the exact, binning-free companion to ``dq_psi_drift``: D =
-    sup|ECDF_ref − ECDF_cur| computed over the union of observed
-    values with right-continuous tie handling.
-
-    ORACLE: ``DQ_KS_DRIFT_SQL`` replays the identical running-ECDF
-    construction (RANGE frame = ties consumed together), so the hash
-    covers the tie convention, not just the formula."""
-    from ..operators.quality_checks import ks_drift
-
-    ev = _t(spark, sf_dir, "events")
-    mid = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    ref = ev.filter(F.col("ts") < mid)
-    cur = ev.filter(F.col("ts") >= mid)
-    return ks_drift(ref, cur, "value", ["event_type"]).orderBy("event_type")
-
-
-DQ_KS_DRIFT_SQL = """
-WITH u AS (
-  SELECT event_type, CAST(value AS DOUBLE) AS v, 'r' AS w
-  FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00' AND value IS NOT NULL
-  UNION ALL
-  SELECT event_type, CAST(value AS DOUBLE) AS v, 'c' AS w
-  FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00' AND value IS NOT NULL
-), counts AS (
-  SELECT event_type,
-         SUM(CASE WHEN w = 'r' THEN 1 ELSE 0 END) AS n_ref,
-         SUM(CASE WHEN w = 'c' THEN 1 ELSE 0 END) AS n_cur
-  FROM u GROUP BY 1
-), stepped AS (
-  SELECT event_type, v,
-         SUM(CASE WHEN w = 'r' THEN 1 ELSE 0 END)
-           OVER (PARTITION BY event_type ORDER BY v
-                 RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cr,
-         SUM(CASE WHEN w = 'c' THEN 1 ELSE 0 END)
-           OVER (PARTITION BY event_type ORDER BY v
-                 RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc
-  FROM u
-)
-SELECT s.event_type,
-       ROUND(MAX(ABS(s.cr / c.n_ref - s.cc / c.n_cur)), 6) AS ks,
-       CAST(MAX(c.n_ref) AS BIGINT) AS n_ref,
-       CAST(MAX(c.n_cur) AS BIGINT) AS n_cur
-FROM stepped s JOIN counts c USING (event_type)
-WHERE c.n_ref > 0 AND c.n_cur > 0
-GROUP BY 1
-ORDER BY 1
-"""
-
-PART_QUERIES["dq_ks_drift"] = dq_ks_drift
-PART_ORACLES["dq_ks_drift"] = DQ_KS_DRIFT_SQL

@@ -61,48 +61,6 @@ PART_ORACLES["dedup_minhash_incremental_docs"] = DEDUP_MINHASH_INCREMENTAL_SQL
 
 
 # ===========================================================================
-# round 6: exact heavy hitters — Misra-Gries candidates + exact recount
-# ===========================================================================
-
-
-def a_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Users producing > 0.8 % of all events, found WITHOUT a
-    full-key-space shuffle (operators/sketches.heavy_hitters_exact):
-    per-partition Misra-Gries candidates via Arrow, then an exact
-    broadcast-semi recount of the candidate set only.
-
-    ORACLE: the plain GROUP BY ... HAVING count > θ·n — the operator's
-    output is exact by construction (pass 2 recounts), so the hash
-    proves the MG candidate pass lost no true heavy hitter on real
-    data, not just in the proof sketch. The route is PINNED to
-    misra_gries here precisely because the default ``route="auto"``
-    would (correctly — it is the measured-faster single-box plan,
-    BASELINE.md round 6) take plain groupBy-HAVING, which is also the
-    oracle: the row would stop exercising the candidate machinery.
-    """
-    from ..operators.sketches import heavy_hitters_exact
-
-    ev = _t(spark, sf_dir, "events")
-    return heavy_hitters_exact(
-        ev, "user_id", threshold=0.008, route="misra_gries"
-    ).orderBy("user_id")
-
-
-A_HEAVY_HITTERS_SQL = """
-WITH d AS (SELECT user_id FROM events WHERE user_id IS NOT NULL)
-SELECT user_id,
-       COUNT(*) AS cnt,
-       ROUND(COUNT(*) / (SELECT COUNT(*) FROM d), 6) AS share
-FROM d
-GROUP BY user_id
-HAVING COUNT(*) > 0.008 * (SELECT COUNT(*) FROM d)
-"""
-
-PART_QUERIES["a_heavy_hitters_events"] = a_heavy_hitters_events
-PART_ORACLES["a_heavy_hitters_events"] = A_HEAVY_HITTERS_SQL
-
-
-# ===========================================================================
 # round 6: Z-order layout — Morton key for multi-column data skipping
 # ===========================================================================
 
@@ -362,54 +320,6 @@ QUALITY_ENTROPY_SQL = _quality_entropy_sql()
 
 PART_QUERIES["quality_entropy_docs"] = quality_entropy_docs
 PART_ORACLES["quality_entropy_docs"] = QUALITY_ENTROPY_SQL
-
-
-# ===========================================================================
-# round 6: column profiler — stacked one-scan table profile
-# ===========================================================================
-
-
-def dq_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-profile report over events (operators/quality_checks.
-    profile_table): per column, rows / nulls / exact distinct / modal
-    value+count — the one-scan, two-shuffle stacked formulation (adding
-    columns widens one explode, never adds jobs).
-
-    ORACLE: ``DQ_PROFILE_SQL`` stacks the same columns with UNION ALL
-    and ranks modal values with the identical (cnt DESC, val ASC) total
-    order.
-    """
-    from ..operators.quality_checks import profile_table
-
-    ev = _t(spark, sf_dir, "events")
-    return profile_table(
-        ev, ["event_id", "user_id", "event_type", "props"]
-    ).orderBy("col_name")
-
-
-DQ_PROFILE_SQL = """
-WITH stacked AS (
-  SELECT 'event_id' AS col_name, CAST(event_id AS VARCHAR) AS val FROM events
-  UNION ALL SELECT 'user_id', CAST(user_id AS VARCHAR) FROM events
-  UNION ALL SELECT 'event_type', event_type FROM events
-  UNION ALL SELECT 'props', props FROM events
-), counts AS (
-  SELECT col_name, val, COUNT(*) AS cnt FROM stacked GROUP BY col_name, val
-), top AS (
-  SELECT col_name, val AS top_value, cnt AS top_count,
-         ROW_NUMBER() OVER (PARTITION BY col_name ORDER BY cnt DESC, val) AS rn
-  FROM counts WHERE val IS NOT NULL
-)
-SELECT c.col_name, CAST(SUM(c.cnt) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN c.val IS NULL THEN c.cnt ELSE 0 END) AS BIGINT) AS n_nulls,
-       COUNT(CASE WHEN c.val IS NOT NULL THEN 1 END) AS n_distinct,
-       t.top_value, t.top_count
-FROM counts c LEFT JOIN top t ON c.col_name = t.col_name AND t.rn = 1
-GROUP BY c.col_name, t.top_value, t.top_count
-"""
-
-PART_QUERIES["dq_profile_events"] = dq_profile_events
-PART_ORACLES["dq_profile_events"] = DQ_PROFILE_SQL
 
 
 def geo_radius_join_banded_events(spark: SparkSession, sf_dir: str) -> DataFrame:

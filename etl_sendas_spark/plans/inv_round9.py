@@ -873,75 +873,7 @@ PART_QUERIES["corpus_refresh_incremental_docs"] = corpus_refresh_incremental_doc
 PART_ORACLES["corpus_refresh_incremental_docs"] = CORPUS_REFRESH_SQL
 
 # ===========================================================================
-# round 9 (cont.): time-series regularization — grid resample + ffill
-# ===========================================================================
-
-
-def ts_resample_ffill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user 6-hour grid resample of the events value stream with
-    forward fill (operators/timeseries.resample_ffill): every user's
-    irregular samples land on their own min..max bucket grid, empty
-    buckets carry n=0 and inherit the last populated bucket's value,
-    filled flags them. The hash covers the bucket math, each key's
-    span derivation, the grid expansion, the aggregate, AND the fill.
-
-    ORACLE: same buckets via epoch arithmetic, per-key
-    generate_series grid, and the portable gaps-and-islands fill
-    (count-non-null running group + max-per-group) instead of any
-    engine's IGNORE NULLS window extension."""
-    from ..operators.timeseries import resample_ffill
-
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
-    out = resample_ffill(
-        ev, keys=["user_id"], ts_col="ts", value_col="value",
-        step_seconds=21600, agg="avg",
-    )
-    return out.select(
-        "user_id",
-        F.col("bucket_ts").cast("long").alias("bucket_epoch"),
-        "n",
-        "value",
-        F.col("filled").cast("long").alias("filled"),
-    )
-
-
-TS_RESAMPLE_SQL = """
-WITH base AS (
-  SELECT user_id,
-         CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT) AS b,
-         value
-  FROM events
-), pb AS (
-  SELECT user_id, b, CAST(COUNT(*) AS BIGINT) AS n, AVG(value) AS val
-  FROM base GROUP BY 1, 2
-), spans AS (
-  SELECT user_id, MIN(b) AS lo, MAX(b) AS hi FROM pb GROUP BY 1
-), grid AS (
-  SELECT s.user_id, CAST(g.g AS BIGINT) AS b
-  FROM spans s, LATERAL unnest(generate_series(s.lo, s.hi, 21600)) AS g(g)
-), j AS (
-  SELECT g.user_id, g.b, pb.n, pb.val
-  FROM grid g LEFT JOIN pb ON pb.user_id = g.user_id AND pb.b = g.b
-), grp AS (
-  SELECT user_id, b, n, val,
-         COUNT(CASE WHEN val IS NOT NULL THEN 1 END)
-           OVER (PARTITION BY user_id ORDER BY b
-                 ROWS UNBOUNDED PRECEDING) AS isl
-  FROM j
-)
-SELECT user_id,
-       b AS bucket_epoch,
-       COALESCE(n, 0) AS n,
-       ROUND(MAX(val) OVER (PARTITION BY user_id, isl), 6) AS value,
-       CAST(CASE WHEN n IS NULL THEN 1 ELSE 0 END AS BIGINT) AS filled
-FROM grp
-"""
-
-PART_QUERIES["ts_resample_ffill_events"] = ts_resample_ffill_events
-PART_ORACLES["ts_resample_ffill_events"] = TS_RESAMPLE_SQL
-
-# ===========================================================================
-# round 9 (cont.): privacy gates + robust outlier gating
+# round 9 (cont.): privacy gates
 # ===========================================================================
 
 
@@ -1002,52 +934,3 @@ WHERE g.k >= 3 AND g.l >= 2
 
 PART_QUERIES["privacy_k_anonymize_events"] = privacy_k_anonymize_events
 PART_ORACLES["privacy_k_anonymize_events"] = PRIVACY_K_SQL
-
-
-def quality_mad_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-event-type outlier flags via the median/MAD modified
-    z-score (operators/quality_checks.mad_outliers) — the gate that
-    survives the outliers it hunts (mean/σ inflates, medians don't).
-    Output: every flagged event plus its group's med/MAD and rounded
-    z; the hash pins the exact flag set and the percentile math.
-
-    ORACLE: interpolated medians (quantile_cont) + the same rule."""
-    from ..operators.quality_checks import mad_outliers
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select("event_id", "event_type", "value")
-    )
-    out = mad_outliers(ev, ["event_type"], "value", thresh=3.5)
-    return out.filter(F.col("is_outlier") == 1).select(
-        "event_id", "event_type", "med", "mad", "mad_z"
-    )
-
-
-QUALITY_MAD_SQL = """
-WITH base AS (
-  SELECT event_id, event_type, value FROM events WHERE value IS NOT NULL
-), med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM base GROUP BY 1
-), mad AS (
-  SELECT b.event_type, quantile_cont(abs(b.value - m.med), 0.5) AS mad
-  FROM base b JOIN med m USING (event_type) GROUP BY 1
-), z AS (
-  SELECT b.event_id, b.event_type,
-         ROUND(m.med, 6) AS med, ROUND(d.mad, 6) AS mad,
-         CASE WHEN d.mad <> 0
-              THEN ROUND(0.6745 * (b.value - m.med) / d.mad, 6) END AS mad_z,
-         CASE WHEN d.mad <> 0
-              THEN CASE WHEN abs(0.6745 * (b.value - m.med) / d.mad) > 3.5
-                        THEN 1 ELSE 0 END
-              ELSE CASE WHEN b.value <> m.med THEN 1 ELSE 0 END
-         END AS is_outlier
-  FROM base b JOIN med m USING (event_type) JOIN mad d USING (event_type)
-)
-SELECT event_id, event_type, med, mad, mad_z FROM z WHERE is_outlier = 1
-"""
-
-PART_QUERIES["quality_mad_outliers_events"] = quality_mad_outliers_events
-PART_ORACLES["quality_mad_outliers_events"] = QUALITY_MAD_SQL

@@ -167,7 +167,6 @@ EXTRA_QUERIES = {
     "streaming_sliding_counts": streaming_sliding_counts,  # windowed agg → streaming_tumbling_counts
     "multimodal_pointer_features": multimodal_pointer_features,  # blob-store pointer resolution ext
     "video_frame_sample": video_frame_sample,  # uncompressed-AVI frame sampling ext
-    "sketch_distinct_kmv": sketch_distinct_kmv,  # mergeable KMV cardinality rollup (round 4)
     "quality_model_filter": quality_model_filter,  # linear quality classifier, IEEE-exact logit
     "quantize_embeddings_q8": quantize_embeddings_q8,  # int8 embedding quantization
     "s8_jsonl_roundtrip": s8_jsonl_roundtrip,  # JSONL interchange roundtrip
@@ -175,7 +174,6 @@ EXTRA_QUERIES = {
     "vocab_top_tokens": vocab_top_tokens,  # tokenizer-seed vocab induction
     "dedup_incremental_docs": dedup_incremental_docs,  # ingest-wave dedup vs fingerprint index
     "sample_stratified_exact_k": sample_stratified_exact_k,  # exact-k eval-set carving
-    "sketch_corpus_overlap": sketch_corpus_overlap,  # KMV set algebra: corpus-vs-corpus overlap
     "streaming_distinct_users": streaming_distinct_users,  # chained stateful dedup -> windowed count
     "q5_local_supplier_revenue": q5_local_supplier_revenue,  # six-table join tree (TPC-H Q5 shape)
     "q17_small_quantity_revenue": q17_small_quantity_revenue,  # correlated subquery -> window decorrelation
@@ -256,7 +254,6 @@ EXTRA_ORACLES = {
     "streaming_sliding_counts": STREAM_SLIDING_SQL,
     "multimodal_pointer_features": MULTIMODAL_SQL,
     "video_frame_sample": VIDEO_FRAME_SQL,
-    "sketch_distinct_kmv": SKETCH_KMV_SQL,
     "quality_model_filter": QUALITY_MODEL_SQL,
     "quantize_embeddings_q8": QUANTIZE_Q8_SQL,
     "s8_jsonl_roundtrip": S8_JSONL_SQL,
@@ -264,7 +261,6 @@ EXTRA_ORACLES = {
     "vocab_top_tokens": VOCAB_TOPK_SQL,
     "dedup_incremental_docs": DEDUP_INCREMENTAL_SQL,
     "sample_stratified_exact_k": SAMPLE_EXACT_K_SQL,
-    "sketch_corpus_overlap": SKETCH_OVERLAP_SQL,
     "streaming_distinct_users": STREAM_DISTINCT_USERS_SQL,
     "q5_local_supplier_revenue": Q5_SQL,
     "q17_small_quantity_revenue": Q17_SQL,
@@ -332,231 +328,6 @@ EXTRA_ORACLES.update(_inv_round12.PART_ORACLES)
 # registries mechanically. Rationale for each past rotation lives in
 # git history; the standing policy: one in-window row per distinct
 # operator machinery, near-duplicate variants stay in EXTRA.
-# Round-5 rotation: substring-span dedup, the PIT/SCD2 interval join,
-# HITS, and MIN/MAX IVM enter (each is new machinery: global-first
-# canonical spans, as-of≡interval equivalence, alternating mat-vec,
-# affected-key recompute); j_semi_membership (window-flag semi-join
-# pinned by r4_invoice_zeroing), a4_first_flag (first-flag pinned by
-# f1_priority_pick + the pipeline), dedup_ngram_jaccard_docs
-# (posting-join machinery pinned by fuzzy_match_part_names), and
-# chunk_documents (array/window reshaping pinned by
-# pack_training_sequences) hold the same oracle bar in EXTRA.
-# Round-5 second-session rotation: dedup_semantic_docs (cluster-bounded
-# pair generation — a third family no in-window row covers),
-# j_bloom_prefilter (bit-level sketch membership, shuffle-free probe),
-# and search_hybrid_rrf_docs (its oracle replays BOTH the full BM25
-# pipeline and the brute-cosine kernel plus the rank fusion) enter;
-# search_bm25_docs and ann_cosine_topk leave because hybrid's oracle
-# contains each of them whole, and dedup_exact_docs leaves because the
-# fingerprint-groupBy machinery is driver-pinned inside
-# corpus_training_manifest's exact-dedup stage.
-# Round-6 rotation (the r5 verdict's item 10 plus the new machinery):
-# IN — search_hybrid_rrf_ivf_docs (the IVF index INSIDE the rank
-# fusion; its oracle replays BM25 + centroid sample + cluster probing
-# + fusion end-to-end), graph_triangle_counts (wedge-join O(m^1.5)
-# machinery, nothing else covers it), a_association_rules
-# (support/confidence/lift over pinned baskets), sample_group_split_docs
-# (leakage-safe group-hash split), dq_psi_drift (binned-distribution
-# drift). OUT, each still holding the identical oracle bar in EXTRA:
-# search_hybrid_rrf_docs (the brute variant; BM25 + fusion stay
-# driver-covered by the IVF variant, the brute-cosine kernel keeps its
-# pytest parity row), graph_pagerank_entities (iterative mat-vec
-# driver-pinned by graph_hits_entities), ivm_incremental_agg
-# (incremental_agg_update driver-pinned inside streaming_matview_counts),
-# r2_dual_key_mark (windowed first-flag machinery driver-pinned by
-# f1_priority_pick and r1_capped_mark), sample_stratified_docs
-# (per-stratum hash-rank sampling; the sampling family's driver row is
-# now the group split, stratified keeps the pytest bar).
-# Round-6 second-session rotation (new machinery from this session):
-# IN — dedup_minhash_incremental_docs (wave-vs-index probe; its oracle
-# and implementation contain the banded-LSH family + exact-Jaccard
-# verification whole), a_heavy_hitters_events (Misra-Gries candidate
-# pass + exact recount — no other row touches bounded-candidate
-# aggregation), layout_zorder_events (Morton interleave + broadcast
-# min/max scaling — the layout family's first row). OUT, each keeping
-# the identical oracle bar in EXTRA: dedup_minhash_lsh_docs (batch
-# banded LSH — the incremental row drives the same _band_buckets and
-# verification machinery plus the probe), q3_shipping_priority (its
-# dim join / agg / top-k machinery is driver-pinned by
-# j_broadcast_enrich, q1_pricing_summary and o_topk_per_group),
-# embedding_near_dup_bucketed (sign-LSH bucket join; embedding-space
-# dedup stays driver-covered by dedup_semantic_docs, and the Hamming
-# bucket machinery by multimodal_features' fingerprint path).
-# Round-6 third-session rotation (new machinery from this session):
-# IN — bpe_pair_counts_docs (the corpus→word-vocab reduction + symbol
-# pair stats behind tokenizer training — no other row aggregates over
-# exploded symbol arrays), geo_radius_join_events (spatial cell-bucket
-# join; oracle is brute-force all-pairs, so the driver hash proves the
-# grid expansion's recall), quality_entropy_docs (37-term
-# length-difference counting — the one bit-identical float-summation
-# oracle), dq_profile_events (stacked one-scan profile; modal
-# min-over-struct tiebreak). OUT, each keeping the identical oracle bar
-# in EXTRA: scalar_name_split (Arrow struct-scalar machinery
-# driver-pinned inside multimodal_features' decode UDFs),
-# s3_filename_partition (filename-derived columns driver-pinned inside
-# u_union_dedup_files + a1_latest_partition), j_bloom_prefilter
-# (bit-level sketch membership had its r5 driver outing; sketch-family
-# coverage stays via a_heavy_hitters_events), dedup_segments_docs
-# (line-level token reshaping driver-pinned by dedup_substring_spans_docs
-# and pack_training_sequences; segment dedup keeps its pytest bar).
-# Round-7 rotation (executes the r6 queue + gives the txlog its first
-# driver outing): IN — txlog_time_travel_events (transaction-log table
-# format: version replay, time travel, overwrite remove-sets, zone-map
-# file pruning — the round-6 flagship surface had no driver row),
-# langid_ngram_docs (trained-model rank-displacement scoring),
-# a_exact_quantile_histogram (iterative value-domain selection; its
-# ADVICE-flagged FP bucket-edge membership was fixed + boundary-planted
-# test BEFORE rotating in). OUT, each keeping the identical oracle bar
-# in EXTRA after a green r6 outing: quality_entropy_docs (bit-identical
-# float-sum machinery; text-quality family stays driver-pinned by
-# text_features + langid), a_heavy_hitters_events (bounded-candidate
-# aggregation; sketch-family driver coverage moves to the exact
-# quantile's histogram selection), layout_zorder_events (Morton
-# interleave; the at-rest layout family's scale story — manifest-level
-# file skipping — is now driver-hashed end-to-end inside
-# txlog_time_travel_events, which asserts the pruned scan read fewer
-# files). Streaming rows (5) and Sendas rule rows untouched per the
-# keep-the-window-honest rule.
-# Round-8 rotation (executes the r7 queue verbatim): IN —
-# ann_ivfpq_topk (product quantization: codebook sampling + subspace
-# argmin encoding + ADC — no other row scores candidates without their
-# vectors; runs the production numpy encode against the exact-math
-# oracle), crawl_ingest_pipeline (WARC transport + HTML strip chain +
-# quality gate end-to-end; subsumes html_extract_docs and
-# s9_warc_roundtrip), txlog_change_feed_events (per-commit
-# snapshot-diff composition; the lifecycle row pins the format, this
-# one pins the CDC read path). OUT, each after green driver outings
-# (r7) and keeping the identical oracle bar in EXTRA:
-# graph_triangle_counts (bucket self-join + count machinery — the
-# graph family's driver row stays the iterative graph_hits_entities,
-# and bucket self-joins stay driver-pinned by the minhash and fuzzy
-# rows), dq_profile_events (wide per-column aggregation; the DQ
-# family's driver row stays dq_psi_drift, and wide-agg machinery stays
-# pinned by a_grouping_sets_events + a_exact_quantile_histogram),
-# j_range_bucketed (bucketed range join; the time-conditional join
-# family keeps TWO driver rows — j_asof_events for as-of backward
-# search and j_pit_scd2_enrich for point-in-time interval predicates).
-# Streaming rows (5) and Sendas rule rows untouched per the
-# keep-the-window-honest rule.
-# Round-9 rotation (executes the r8 queue verbatim): IN —
-# txlog_dml_events (file-level copy-on-write DELETE→UPDATE→MERGE with
-# an in-query CoW assertion — no other row exercises row-level DML),
-# streaming_txlog_source_ingest (the native format("txlog")
-# DataSource: version offsets, Arrow ingest, checkpointed exactly-once
-# drain — no other row exercises the Python DataSource API),
-# txlog_partitioned_prune_events (partition-first + zone-map pruning
-# asserted in-query via inputFiles). OUT, each after green driver
-# outings (r7/r8) and keeping the identical oracle bar in EXTRA:
-# txlog_time_travel_events (version replay + zone-map pruning both
-# re-pinned inside the partitioned and DML rows), w_window_frames and
-# d1_keep_first (the two single-shuffle window-family rows whose plan
-# shapes — single Exchange / map-side WindowGroupLimit — stay pinned
-# in test_plan_shapes:70,157,247; the window family keeps
-# o_topk_per_group as its driver row, and keep-first machinery stays
-# driver-exercised inside sendas_full_pipeline's D1 stage).
-# Streaming rows (5) and Sendas rule rows untouched per the
-# keep-the-window-honest rule.
-# Round-10 rotation (executes the r9 verdict's item 1 verbatim —
-# all ELEVEN late round-9 rows in). IN: txlog_dml_dv_events
-# (merge-on-read deletion vectors: dv delete + dv update +
-# CoW-over-dv + compaction absorption), streaming_txlog_cdf_ivm_events
-# (readChangeFeed DataSource draining a DML ladder through engine
-# checkpoints into incremental_agg_update), dsir_select_docs
-# (hashed-bin importance weights + Gumbel-top-k), ivm_join_view_events
-# (bilinear join-IVM delta algebra), quality_lsq_classifier_docs (the
-# registry's one TRAINED model — integer moments + Cramer under the
-# hash), search_bm25_index_at_rest_docs (at-rest inverted index with
-# in-query partition-prune assertion), corpus_refresh_incremental_docs
-# (idempotent nightly-refresh composite with planted poisoned wave),
-# txlog_bloom_probe_events (Bloom file-index point lookups),
-# privacy_k_anonymize_events (k-anonymity suppression gate),
-# quality_mad_outliers_events (median/MAD outlier gate),
-# ts_resample_ffill_events (grid resample + gaps-and-islands fill).
-# OUT, each after >=1 green driver outing and keeping the identical
-# oracle bar in EXTRA (verdict's sibling-pins rule):
-# txlog_dml_events (CoW delete/update re-pinned inside the DV ladder;
-# MERGE stays in EXTRA + j9_update_then_merge stays driver),
-# txlog_change_feed_events (CDF read path re-pinned by the CDF-IVM
-# streaming row), ivm_minmax_incremental (IVM update algebra pinned by
-# join-IVM + CDF-IVM rows), sample_group_split_docs (sampling slot
-# passes to DSIR; group split keeps EXTRA oracle + property tests),
-# dedup_substring_spans_docs (fingerprint-join machinery pinned by the
-# minhash family), j_pit_scd2_enrich (interval-predicate joins pinned
-# by j_asof_events), a_association_rules, graph_hits_entities,
-# dq_psi_drift (quality family's driver slots pass to MAD + LSQ),
-# langid_ngram_docs (text family keeps text_features),
-# streaming_dedup_events (streaming family keeps 5 driver rows incl.
-# the incoming CDF-IVM row; dedup-in-stream keeps its EXTRA oracle).
-# Round-11 rotation (executes the r10 verdict's item 1 verbatim —
-# the three queued r10 rows in). IN: search_index_refresh_docs
-# (CDF-driven at-rest index maintenance — delete/update/append ladder
-# on the indexed corpus, one atomic replace_where sync, in-query
-# watermark/no-op assertions), txlog_hidden_partition_events
-# (Iceberg-style partition transforms: day+bucket hidden partitioning
-# with in-query scan-routing assertions), ivm_count_distinct_events
-# (the COUNT DISTINCT support-state algebra no other row covers).
-# OUT, each after green driver outings and keeping the identical
-# oracle bar in EXTRA (verdict's sibling-pins rule):
-# txlog_partitioned_prune_events (partition-first pruning re-pinned
-# inside the hidden-partitioning row), search_bm25_index_at_rest_docs
-# (index build+probe machinery re-pinned inside the refresh row,
-# which composes it with DML), dedup_minhash_incremental_docs
-# (incremental near-dup stays driver-pinned inside
-# corpus_refresh_incremental_docs's wave ladder).
-# Round-12 rotation QUEUE (candidates built+strict-audited in r11,
-# to be swapped in next round after their EXTRA outing): IN —
-# txlog_column_mapping_events (Delta-style metadata-only RENAME/DROP
-# mid-DML-ladder with zone-map-through-rename and no-resurrection
-# assertions; no other row exercises the name→physical mapping),
-# catalog_snapshot_events (the multi-table Catalog's atomic pins:
-# torn-state-invisible + pointer-CAS asserted in-query); third
-# candidate txlog_type_widening_events (metadata-only type promotion
-# with mixed-width upcast reads) if a third slot opens. OUT
-# candidates, each with a sibling pinning its machinery:
-# txlog_bloom_probe_events (bloom sidecar probing re-pinned inside
-# txlog_column_mapping_events's pruned-read assertion and the
-# format-level pruning tests), txlog_dml_dv_events (dv ladder keeps
-# its EXTRA oracle; CoW DML is re-pinned by the column-mapping row's
-# update/delete-under-rename ladder).
-# Round-12 rotation (executes the r11 verdict's item 2 verbatim —
-# the three r11 rows in, after their strict-audited EXTRA outing).
-# IN: txlog_column_mapping_events (metadata-only RENAME/DROP
-# mid-DML-ladder, zone-maps translating through the mapping,
-# no-resurrection + time-travel-across-rename assertions),
-# catalog_snapshot_events (multi-table Catalog pins: CAS publish,
-# torn-state-invisible snapshot isolation asserted in-query),
-# txlog_type_widening_events (metadata-only int-family/float→double
-# promotion with mixed-width upcast reads — round 12 adds decimal
-# precision growth and date→timestamp to the lattice). OUT, each
-# after green driver outings (bloom r10+r11, dv r10+r11, MAD
-# r10+r11) and keeping the identical oracle bar in EXTRA
-# (verdict's sibling-pins rule): txlog_bloom_probe_events (bloom
-# sidecar probing re-pinned inside the column-mapping row's
-# pruned-read-through-rename assertion + format-level pruning
-# tests), txlog_dml_dv_events (DV ladder keeps its EXTRA oracle;
-# CoW row-level DML re-pinned by the column-mapping row's
-# update/delete-under-rename ladder), quality_mad_outliers_events
-# (its ×100 perf watch CLOSED at 0.68× in r11 so it no longer needs
-# a driver reading — unlike privacy_k_anonymize_events which stays
-# in-window for its watch; exact-quantile machinery stays driver-
-# pinned by a_exact_quantile_histogram and the quality family keeps
-# quality_lsq_classifier_docs).
-# Round-13 rotation QUEUE (candidates built+oracle-green in r12 EXTRA,
-# to be swapped in after their outing): IN — txlog_clone_events
-# (shallow-clone reference isolation + CoW remove-by-absolute law; no
-# other row exercises cross-table file references),
-# txlog_date_zone_map_events (typed date/decimal zone-map bounds
-# through the JSON log with in-query strict-subset pruning). OUT
-# candidates, each with a sibling pinning its machinery:
-# ivm_count_distinct_events (IVM family keeps ivm_join_view_events +
-# streaming_txlog_cdf_ivm_events driver rows), ts_resample_ffill_events
-# (gaps-and-islands window machinery pinned by r7_gap_mark +
-# sessionize family; its own oracle stays in EXTRA).
-# Round-13 rotation (executes the r12 queue above verbatim, per
-# VERDICT r12 item 8): IN — txlog_clone_events,
-# txlog_date_zone_map_events (both green through their r12 EXTRA
-# outing). OUT to EXTRA, identical oracle bar kept —
-# ivm_count_distinct_events, ts_resample_ffill_events.
 DRIVER_WINDOW = [
     "q1_pricing_summary",
     "a_exact_quantile_histogram",

@@ -555,103 +555,6 @@ def stream_maintain_agg_view(
     return q
 
 
-def quantile_sketch_stream(
-    events: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    k: int = 128,
-) -> DataFrame:
-    """The mergeable quantile sketch MAINTAINED ON A STREAM: per group,
-    GroupState holds exactly the bottom-``k`` (row-hash, value) pairs
-    plus a seen-row counter — fixed-size state regardless of stream
-    length, the quantile analog of the streaming Count-Min sketch.
-
-    Because the bottom-k-by-hash sample is ORDER-INSENSITIVE (the k
-    smallest of a union do not depend on arrival order or micro-batch
-    boundaries — the same exact merge law `operators/sketches`
-    property-tests in batch), the streamed state equals the batch
-    sketch bit-for-bit, and the SQL oracle replays estimates exactly.
-    No watermark or timeout is needed: state size is k by construction,
-    so there is nothing to evict (contrast the gap-anchor stream, whose
-    state is per-group UNBOUNDED in key count and needs the event-time
-    timeout).
-
-    Emits one row per (group, micro-batch) with the group's current
-    sketch and ``n_seen``; n_seen strictly increases (the fold only
-    runs for groups present in the batch), so the final sketch is the
-    row with max n_seen per group.
-    """
-    import numpy as np
-
-    hv_col = "__hv"
-    out_schema = T.StructType(
-        [
-            T.StructField(group_col, events.schema[group_col].dataType),
-            T.StructField("hvs", T.ArrayType(T.LongType())),
-            T.StructField("vs", T.ArrayType(T.DoubleType())),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("hvs", T.ArrayType(T.LongType())),
-            T.StructField("vs", T.ArrayType(T.DoubleType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def fold(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            hvs, vs, n = state.get
-            hvs, vs = list(hvs), list(vs)
-        else:
-            hvs, vs, n = [], [], 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            hvs.extend(int(x) for x in pdf[hv_col])
-            vs.extend(float(x) for x in pdf[value_col])
-        # Sort by (hv, v) UNCONDITIONALLY — the batch sketch is
-        # sort_array'ed by (hv, v), so a group that never exceeds k must
-        # still emit in sketch order, not arrival order, for the
-        # bit-for-bit parity claim to hold. lexsort keys are
-        # least-significant first: vs breaks (vanishingly rare) hv ties.
-        if hvs:
-            order = np.lexsort(
-                (np.asarray(vs, dtype=np.float64),
-                 np.asarray(hvs, dtype=np.int64))
-            )[:k]
-            hvs = [hvs[i] for i in order]
-            vs = [vs[i] for i in order]
-        state.update((hvs, vs, n))
-        yield pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "hvs": [hvs],
-                "vs": [vs],
-                "n_seen": [n],
-            }
-        )
-
-    from ..operators.dedupe import portable_hash60
-    from pyspark.sql import functions as F
-
-    hashed = events.select(
-        group_col,
-        F.col(value_col).cast("double").alias(value_col),
-        portable_hash60(F.col(id_col).cast("string")).alias(hv_col),
-    )
-    return hashed.groupBy(group_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_upsert_to_txlog(
     stream_df: DataFrame,
     table_path: str,

@@ -91,7 +91,7 @@ def test_flagship_stage_pin_holds_in_cluster_modes(mode, spark, strategy_conf):
         assert "enriched_stage" in plan
 
 
-@pytest.mark.parametrize("mode", ["reliable", "parquet"])
+@pytest.mark.parametrize("mode", ["reliable", "parquet", "none"])
 def test_connected_components_identical_under_cluster_modes(mode, spark, strategy_conf):
     """The CC loop pins per round; every strategy must converge to the
     same labeling (chain 1-2-3 plus isolated pair 10-11)."""
@@ -135,39 +135,6 @@ def test_dedupe_lazy_optout_runs_nothing_eagerly(spark):
 def test_unknown_strategy_rejected(spark):
     with pytest.raises(ValueError, match="unknown materialization strategy"):
         materialize(spark.range(1), strategy="banana")
-
-
-@pytest.mark.parametrize("mode", ["reliable", "parquet", "none"])
-def test_iterative_graph_ops_identical_under_cluster_modes(mode, spark, strategy_conf):
-    """The round-4 iterative operators (PageRank, pointer-doubling
-    forest) pin per-round frames through the same strategy knob: every
-    mode must reproduce the local-mode result exactly."""
-    from pyspark.sql import functions as F
-
-    from etl_sendas_spark.operators.graph import forest_roots, pagerank, symmetrize
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")],
-        "src STRING, dst STRING",
-    )
-    baseline_pr = sorted(
-        (r["node"], round(r["pagerank"], 12))
-        for r in pagerank(symmetrize(edges), iterations=4).collect()
-    )
-    forest = spark.createDataFrame(
-        [(0, None), (1, 0), (2, 1), (3, 1), (9, None), (10, 9)],
-        "id LONG, parent LONG",
-    )
-    baseline_fr = sorted(tuple(r) for r in forest_roots(forest).collect())
-
-    spark.conf.set(CONF_STRATEGY, mode)
-    got_pr = sorted(
-        (r["node"], round(r["pagerank"], 12))
-        for r in pagerank(symmetrize(edges), iterations=4).collect()
-    )
-    got_fr = sorted(tuple(r) for r in forest_roots(forest).collect())
-    assert got_pr == baseline_pr
-    assert got_fr == baseline_fr
 
 
 # ---------------------------------------------------------------------------

@@ -1248,90 +1248,6 @@ def test_frame_sample_mjpeg_planted_frames(spark):
 
 
 # ---------------------------------------------------------------------------
-# sketches: KMV merge law, estimator accuracy, HLL rollup (round 4)
-# ---------------------------------------------------------------------------
-
-def test_kmv_merge_equals_direct_sketch(spark):
-    """The merge identity the sketch's scale story rests on: k smallest
-    of the union of per-part k-minimum sets == k smallest of the union.
-    Exact array equality, not tolerance."""
-    from etl_sendas_spark.operators.sketches import kmv_merge, kmv_sketch
-
-    docs = _docs(spark).filter(F.col("text").isNotNull()).select(
-        "lang", "source", F.col("text").alias("v")
-    )
-    k = 16
-    per_part = kmv_sketch(docs, ["lang", "source"], "v", k=k)
-    merged = {
-        r["lang"]: r["kmv"]
-        for r in kmv_merge(per_part, ["lang"], "kmv", k=k).collect()
-    }
-    direct = {
-        r["lang"]: r["kmv"]
-        for r in kmv_sketch(docs, ["lang"], "v", k=k).collect()
-    }
-    assert merged == direct
-
-
-def test_kmv_estimate_accuracy(spark):
-    """(k-1)/U(k) estimator: exact below k, and within 4 standard
-    errors (4/sqrt(k-2)) above it on real hash data."""
-    from etl_sendas_spark.operators.sketches import kmv_estimate, kmv_sketch
-
-    docs = _docs(spark).filter(F.col("text").isNotNull()).select(
-        F.lit(1).alias("g"), F.col("text").alias("v")
-    )
-    n_exact = docs.select("v").distinct().count()
-    for k in (8, 32, 1 << 20):
-        sk = kmv_sketch(docs, ["g"], "v", k=k)
-        est = sk.select(kmv_estimate("kmv", k=k).alias("e")).collect()[0]["e"]
-        if n_exact < k:
-            assert est == n_exact, f"k={k}: exact path must be exact"
-        else:
-            tol = 4.0 / (k - 2) ** 0.5
-            assert abs(est - n_exact) <= tol * n_exact, (
-                f"k={k}: {est} vs {n_exact}"
-            )
-
-
-def test_hll_rollup_tolerance_and_merge(spark):
-    """Production HLL path: per-part sketches merged per rollup group
-    estimate within the lgk=12 error envelope (~3*1.04/2^6 ≈ 5%), and
-    the two-level rollup equals the single-shot sketch estimate (both
-    are register-max over the same value set)."""
-    from etl_sendas_spark.operators.sketches import hll_rollup
-
-    docs = _docs(spark).filter(F.col("text").isNotNull())
-    two_level = {
-        r["lang"]: r["distinct_est"]
-        for r in hll_rollup(docs, ["source"], ["lang"], "text").collect()
-    }
-    single = {
-        r["lang"]: r["distinct_est"]
-        for r in docs.groupBy("lang")
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("text").cast("string"), F.lit(12))
-            ).alias("distinct_est")
-        )
-        .collect()
-    }
-    exact = {
-        r["lang"]: r["n"]
-        for r in docs.select("lang", "text")
-        .distinct()
-        .groupBy("lang")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert two_level == single
-    for lang, n in exact.items():
-        assert abs(two_level[lang] - n) <= max(2, 0.05 * n), (
-            f"{lang}: {two_level[lang]} vs {n}"
-        )
-
-
-# ---------------------------------------------------------------------------
 # int8 embedding quantization (round 4)
 # ---------------------------------------------------------------------------
 
@@ -1392,36 +1308,6 @@ def test_jsonl_corrupt_record_quarantine(spark, tmp_path):
     bad = [r for r in rows if r["_corrupt_record"] is not None]
     assert len(bad) == 1 and "{this is not json}" in bad[0]["_corrupt_record"]
     assert good[1]["text"] == "café ✓ ok" and good[2]["text"] is None
-
-
-def test_kmv_jaccard_estimates_planted_overlap(spark):
-    """Two synthetic corpora with true Jaccard 1/3 (|A|=|B|=1000,
-    overlap 500): the sketch-only estimator must land within the
-    ~1/sqrt(k) envelope, and the union estimate within 4 standard
-    errors."""
-    from etl_sendas_spark.operators.sketches import kmv_jaccard, kmv_sketch
-
-    k = 256
-    rows = [("a", str(i)) for i in range(1000)] + [
-        ("b", str(i)) for i in range(500, 1500)
-    ]
-    df = spark.createDataFrame(rows, "side string, v string")
-    sk = kmv_sketch(df, ["side"], "v", k=k)
-    a = sk.filter(F.col("side") == "a").select(F.col("kmv").alias("ka"))
-    b = sk.filter(F.col("side") == "b").select(F.col("kmv").alias("kb"))
-    c = kmv_jaccard("ka", "kb", k=k)
-    row = (
-        a.crossJoin(b)
-        .select(
-            c["jaccard_est"].alias("j"),
-            c["union_est"].alias("u"),
-            c["intersection_est"].alias("i"),
-        )
-        .collect()[0]
-    )
-    assert abs(row["j"] - 1 / 3) <= 4 / (k ** 0.5), row
-    assert abs(row["u"] - 1500) <= 4 * 1500 / ((k - 2) ** 0.5), row
-    assert abs(row["i"] - 500) <= 250, row
 
 
 def test_approx_percentile_within_accuracy_envelope(spark):
@@ -1805,59 +1691,6 @@ def test_ivm_minmax_branches(spark):
     assert out2["b"] == (2.0, 11.0)
 
 
-def test_cms_sketch_properties(spark):
-    """Count-Min laws: (1) the sketch never exceeds depth×width rows
-    however large the stream; (2) estimates are exact-or-over, NEVER
-    under, even at a width tiny enough to force collisions — and the
-    mean overshoot stays near the expected (N-exact)/width; (3) at a
-    width comfortably above the distinct count the estimates are
-    exact; (4) sketches of disjoint halves merged cell-wise equal the
-    whole-stream sketch (counts are linear)."""
-    from etl_sendas_spark.operators.sketches import cms_estimate, cms_sketch
-
-    depth, width = 3, 32  # tiny width FORCES collisions
-    rows = [(f"v{i % 50}",) for i in range(2000)]
-    df = spark.createDataFrame(rows, "x STRING")
-    sk = cms_sketch(df, "x", depth=depth, width=width)
-    assert sk.count() <= depth * width
-
-    probes = spark.createDataFrame(
-        [(f"v{i}",) for i in range(50)], "x STRING"
-    )
-    est = {
-        r["x"]: r["cms_est"]
-        for r in cms_estimate(sk, probes, "x", depth=depth, width=width).collect()
-    }
-    n, exact = len(rows), 40  # 2000 rows over 50 values
-    assert all(est[f"v{i}"] >= exact for i in range(50))  # up-only, always
-    mean_overshoot = sum(est[f"v{i}"] - exact for i in range(50)) / 50
-    assert mean_overshoot <= 2 * n / width  # near the expected error
-
-    # generous width -> no colliding pair survives the min over rows
-    wide = cms_sketch(df, "x", depth=depth, width=4096)
-    est_w = {
-        r["x"]: r["cms_est"]
-        for r in cms_estimate(wide, probes, "x", depth=depth, width=4096).collect()
-    }
-    assert all(est_w[f"v{i}"] == exact for i in range(50))
-
-    # merge = cell-wise add of per-half sketches
-    h1 = cms_sketch(df.limit(1000), "x", depth=depth, width=width)
-    import pyspark.sql.functions as F2
-
-    h2 = cms_sketch(
-        spark.createDataFrame(rows[1000:], "x STRING"), "x", depth=depth, width=width
-    )
-    merged = (
-        h1.unionByName(h2)
-        .groupBy("row", "bucket")
-        .agg(F2.sum("c").alias("c"))
-    )
-    whole = {(r["row"], r["bucket"]): r["c"] for r in sk.collect()}
-    got = {(r["row"], r["bucket"]): r["c"] for r in merged.collect()}
-    assert got == whole
-
-
 def test_star_cc_beats_propagation_on_chains(spark):
     """Large-star/small-star connected components: on a 256-node PATH
     (diameter 255) the star variant converges inside its default round
@@ -1896,105 +1729,6 @@ def test_star_cc_beats_propagation_on_chains(spark):
         for r in connected_components_star(shallow).collect()
     }
     assert a == b
-
-
-def test_quantile_sketch_merge_law_and_error_bound(spark):
-    """(a) Merge identity: sketching two disjoint parts then merging
-    equals sketching the union — byte-for-byte, the same law KMV holds.
-    (b) Accuracy: nearest-rank estimates from the k=256 sample land
-    within the DKW rank band (~2/sqrt(k) of rank, generous constant)
-    of the exact quantiles on a skewed distribution."""
-    from pyspark.sql import functions as F
-
-    from etl_sendas_spark.operators.sketches import (
-        quantile_estimate,
-        quantile_merge,
-        quantile_sketch,
-    )
-
-    # skewed values: v = id^2 over 20k rows, one group
-    df = spark.range(0, 20000).select(
-        F.lit("g").alias("g"),
-        F.col("id").alias("rid"),
-        (F.col("id") * F.col("id")).cast("double").alias("v"),
-    )
-    part1 = df.filter(F.col("rid") % 2 == 0)
-    part2 = df.filter(F.col("rid") % 2 == 1)
-
-    whole = quantile_sketch(df, ["g"], "v", id_cols=["rid"], k=256)
-    merged = quantile_merge(
-        quantile_sketch(part1, ["g"], "v", id_cols=["rid"], k=256).unionByName(
-            quantile_sketch(part2, ["g"], "v", id_cols=["rid"], k=256)
-        ),
-        ["g"],
-        k=256,
-    )
-    a = whole.select("qsk").head()["qsk"]
-    b = merged.select("qsk").head()["qsk"]
-    assert [tuple(x) for x in a] == [tuple(x) for x in b]
-
-    # rank accuracy: invert the estimate back to its true rank
-    est = whole.select(
-        quantile_estimate("qsk", 0.5).alias("p50"),
-        quantile_estimate("qsk", 0.9).alias("p90"),
-    ).head()
-    import math
-
-    n, k = 20000, 256
-    band = 2.0 / math.sqrt(k)  # DKW-ish rank tolerance
-    for q, v in ((0.5, est["p50"]), (0.9, est["p90"])):
-        true_rank = math.sqrt(v) / n  # v = id^2 -> rank(v) = id/n
-        assert abs(true_rank - q) < band, (q, v, true_rank)
-
-
-def test_triangle_counts_known_graphs(spark):
-    """Hand-checked closures: K4 has 4 triangles with every node in 3;
-    a star and a path have none; orientation/duplicate/self-loop noise
-    in the input must not change counts."""
-    from pyspark.sql import functions as F
-
-    from etl_sendas_spark.operators.graph import triangle_counts
-
-    k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    noise = [(b, a) for a, b in k4[:3]] + [(0, 0)]          # reversed dups + loop
-    star = [(100, x) for x in (101, 102, 103, 104)]          # no closure
-    path = [(200, 201), (201, 202), (202, 203)]              # no closure
-    df = spark.createDataFrame(k4 + noise + star + path, "src long, dst long")
-    got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
-    assert got == {0: 3, 1: 3, 2: 3, 3: 3}
-
-    # one extra triangle hanging off K4: node 4 connected to 0 and 1
-    df2 = spark.createDataFrame(k4 + [(0, 4), (4, 1)], "src long, dst long")
-    got2 = {r["node"]: r["triangles"] for r in triangle_counts(df2).collect()}
-    assert got2 == {0: 4, 1: 4, 2: 3, 3: 3, 4: 1}
-
-
-def test_random_walks_valid_and_deterministic(spark):
-    """Every consecutive (step i -> i+1) hop must be a real edge of the
-    symmetrized graph, walks start at their walk_id, every node gets a
-    full-length walk, and a rerun is byte-identical (hash, not RNG)."""
-    from etl_sendas_spark.operators.graph import random_walks, symmetrize
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")],
-        "src string, dst string",
-    )
-    out = random_walks(edges, length=3, seed=5)
-    rows = [(r["walk_id"], r["step"], r["node"]) for r in out.collect()]
-    again = [(r["walk_id"], r["step"], r["node"])
-             for r in random_walks(edges, length=3, seed=5).collect()]
-    assert sorted(rows) == sorted(again)
-
-    und = {(r["src"], r["dst"]) for r in symmetrize(edges).collect()}
-    walks = {}
-    for wid, step, node in rows:
-        walks.setdefault(wid, {})[step] = node
-    assert set(walks) == {"a", "b", "c", "d"}
-    for wid, path in walks.items():
-        assert sorted(path) == [0, 1, 2, 3], (wid, path)
-        assert path[0] == wid
-        for i in range(3):
-            assert (path[i], path[i + 1]) in und, (wid, path)
 
 
 def test_group_split_leakage_free_and_stable(spark):
@@ -2041,62 +1775,6 @@ def test_group_split_leakage_free_and_stable(spark):
         group_split(df, "grp", [("a", 0.0)])
     with _pytest.raises(ValueError):
         group_split(df, "grp", [("a", 0.7), ("b", 0.5)])
-
-
-def test_psi_drift_planted_shift_and_null_case(spark):
-    """Identical distributions read PSI ~ 0; a planted location shift
-    reads > 0.25 ('significant shift' on the standard scale); empty
-    bins stay finite (smoothing); bad inputs fail fast."""
-    import pytest as _pytest
-
-    from etl_sendas_spark.operators.quality_checks import psi_drift
-
-    base = [(i, float(i % 100)) for i in range(2000)]
-    ref = spark.createDataFrame(base, "id long, v double")
-    same = psi_drift(ref, ref, "v").first()
-    assert abs(same["psi"]) < 1e-6
-    assert same["n_ref"] == same["n_cur"] == 2000
-
-    # location shift: mass moves to the top of the frozen range
-    shifted = spark.createDataFrame(
-        [(i, 90.0 + (i % 100) / 10.0) for i in range(2000)], "id long, v double"
-    )
-    drift = psi_drift(ref, shifted, "v").first()
-    assert drift["psi"] > 0.25, drift
-
-    # values beyond the frozen reference range clamp into edge bins
-    wild = spark.createDataFrame(
-        [(1, -1e9), (2, 1e9), (3, 50.0)], "id long, v double"
-    )
-    clamped = psi_drift(ref, wild, "v").first()
-    assert math.isfinite(clamped["psi"]) and clamped["n_cur"] == 3
-
-    with _pytest.raises(ValueError):
-        psi_drift(ref, ref, "v", n_bins=1)
-    with _pytest.raises(ValueError):
-        psi_drift(ref, ref, "v", lo=5.0, hi=5.0)
-
-
-def test_bloom_null_values_are_not_members(spark):
-    """NULL hygiene on both Bloom sides (r5 advice): a NULL build value
-    sets no bits (it would otherwise insert a (NULL, NULL) word row),
-    and a NULL probe value reads "not a member" (0) — matching the SQL
-    oracle's CASE — instead of poisoning the flag product to NULL."""
-    from etl_sendas_spark.operators.sketches import bloom_build, bloom_filter_probe
-
-    members = spark.createDataFrame(
-        [(7,), (None,), (21,)], "v long"
-    )
-    bloom = bloom_build(members, "v", m_words=64, k_hashes=3)
-    # no NULL word rows leaked into the filter table
-    assert bloom.filter(F.col("w").isNull() | F.col("bits").isNull()).count() == 0
-
-    probes = spark.createDataFrame([(7,), (None,), (999_983,)], "v long")
-    out = bloom_filter_probe(probes, "v", bloom, m_words=64, k_hashes=3)
-    got = {r["v"]: r["might_contain"] for r in out.collect()}
-    assert got[7] == 1                      # member still flagged
-    assert got[None] == 0                   # NULL probe: 0, never NULL
-    assert got[None] is not None
 
 
 def test_round_half_up_matches_spark_round(spark):
@@ -2277,165 +1955,6 @@ def test_prefix_jaccard_pairs_equals_bruteforce(spark):
             sorted(set(got) - set(want))[:5],
         )
         assert len(got) > 0, t  # planted twins guarantee non-empty
-
-
-def test_funnel_steps_semantics(spark):
-    """Hand-built funnel edge cases: strict ordering (same-timestamp
-    events do NOT chain), the first-touch anchor (a user whose only
-    valid window opens at a LATER step-1 event does not convert —
-    documented convention), the deadline cut, and the empty-cohort
-    guard (no step-1 events → zero rows, not a divide by zero)."""
-    import datetime as dt
-
-    from etl_sendas_spark.operators.timeseries import funnel_steps
-
-    t0 = dt.datetime(2024, 1, 1)
-    h = lambda n: t0 + dt.timedelta(hours=n)
-    rows = [
-        # user 1: clean A(0h) -> B(1h) -> C(2h): full conversion
-        (1, h(0), "A"), (1, h(1), "B"), (1, h(2), "C"),
-        # user 2: B at the SAME ts as A -> strict '>' blocks step 2
-        (2, h(0), "A"), (2, h(0), "B"),
-        # user 3: B before A -> order wrong, step 2 not reached
-        (3, h(5), "A"), (3, h(4), "B"),
-        # user 4: B beyond the 6h deadline of the FIRST A (first-touch:
-        # the second A at 10h would put B in-window, but does not count)
-        (4, h(0), "A"), (4, h(10), "A"), (4, h(12), "B"),
-        # user 5: A -> B inside window, C outside deadline
-        (5, h(0), "A"), (5, h(1), "B"), (5, h(20), "C"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    got = {
-        r["step"]: (r["n_users"], r["conversion"])
-        for r in funnel_steps(
-            ev, ["A", "B", "C"], within="6 hours"
-        ).collect()
-    }
-    assert got == {"A": (5, 1.0), "B": (2, 0.4), "C": (1, 0.2)}, got
-
-    # without a window, user 5 converts fully and user 4 reaches B
-    got2 = {
-        r["step"]: r["n_users"]
-        for r in funnel_steps(ev, ["A", "B", "C"]).collect()
-    }
-    assert got2 == {"A": 5, "B": 3, "C": 2}, got2
-
-    # empty step-1 cohort: zero rows
-    assert funnel_steps(ev, ["Z", "B"]).count() == 0
-
-
-def test_ks_drift_matches_scipy_convention(spark):
-    """KS against a pure-Python reference (the scipy two-sample
-    formula, computed directly from sorted samples) on groups with
-    ties, identical distributions, and a planted location shift."""
-    import random as _random
-
-    from etl_sendas_spark.operators.quality_checks import ks_drift
-
-    rng = _random.Random(5)
-    ref_rows, cur_rows = [], []
-    data = {}
-    for g, shift in (("same", 0.0), ("shifted", 5.0), ("tied", 0.0)):
-        rv = [float(rng.randint(0, 30)) for _ in range(200)]
-        cv = [float(rng.randint(0, 30)) + shift for _ in range(150)]
-        if g == "tied":
-            rv = [float(x % 3) for x in range(200)]   # heavy ties
-            cv = [float((x + 1) % 3) for x in range(150)]
-        data[g] = (rv, cv)
-        ref_rows += [(g, v) for v in rv]
-        cur_rows += [(g, v) for v in cv]
-
-    ref = spark.createDataFrame(ref_rows, "event_type string, value double")
-    cur = spark.createDataFrame(cur_rows, "event_type string, value double")
-    got = {
-        r["event_type"]: (r["ks"], r["n_ref"], r["n_cur"])
-        for r in ks_drift(ref, cur, "value", ["event_type"]).collect()
-    }
-
-    def py_ks(a, b):
-        xs = sorted(set(a) | set(b))
-        na, nb = len(a), len(b)
-        sa, sb = sorted(a), sorted(b)
-        import bisect
-
-        return max(
-            abs(bisect.bisect_right(sa, x) / na - bisect.bisect_right(sb, x) / nb)
-            for x in xs
-        )
-
-    for g, (rv, cv) in data.items():
-        assert got[g][1:] == (len(rv), len(cv))
-        assert abs(got[g][0] - round(py_ks(rv, cv), 6)) < 1e-9, g
-    assert got["shifted"][0] > got["same"][0]
-    # a group missing one side is dropped, not divided by zero
-    only_ref = spark.createDataFrame([("x", 1.0)], "event_type string, value double")
-    empty = spark.createDataFrame([], "event_type string, value double")
-    assert ks_drift(only_ref, empty, "value", ["event_type"]).count() == 0
-
-
-def test_heavy_hitters_exact_skewed_and_deterministic(spark):
-    """The MG candidate pass may not lose a true heavy hitter under
-    heavy skew, tiny capacity, or adversarial partitioning, and the
-    exact recount must make the output identical to a plain
-    groupBy-HAVING regardless of partition layout."""
-    from etl_sendas_spark.operators.sketches import heavy_hitters_exact
-
-    # 100k rows: key 0 = 20%, key 1 = 5%, keys 2.. uniform tail + nulls
-    df = spark.range(0, 100_000).select(
-        F.when(F.col("id") % 5 == 0, F.lit(0))
-        .when(F.col("id") % 20 == 1, F.lit(1))
-        .when(F.col("id") % 97 == 3, F.lit(None))
-        .otherwise((F.col("id") % 4096) + 10)
-        .alias("k")
-    )
-    truth = {
-        (r["k"], r["count"])
-        for r in df.filter(F.col("k").isNotNull())
-        .groupBy("k")
-        .count()
-        .collect()
-        if r["count"] > 0.04 * 97938  # non-null total
-    }
-    for parts in (3, 32, 200):
-        for route in ("auto", "groupby", "misra_gries"):
-            out = heavy_hitters_exact(
-                df.repartition(parts), "k", threshold=0.04, route=route
-            )
-            got = {(r["k"], r["cnt"]) for r in out.collect()}
-            assert got == truth, f"parts={parts} route={route}"
-
-    # capacity below the default still keeps exactness (recount guards),
-    # as long as capacity >= ceil(1/theta) the guarantee argument holds;
-    # here we deliberately pass the minimum
-    out_min = heavy_hitters_exact(
-        df, "k", threshold=0.04, capacity=25, route="misra_gries"
-    )
-    assert {(r["k"], r["cnt"]) for r in out_min.collect()} == truth
-
-    # MG plan: below _ISIN_CAP candidates the recount is a pure filtered
-    # scan (IN-list pushed into the scan stage) — no join of any kind,
-    # and the one aggregate runs over candidate rows only
-    plan = (
-        heavy_hitters_exact(df, "k", 0.04, route="misra_gries")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Join" not in plan
-    assert " IN " in plan or "isin" in plan.lower() or "INSET" in plan.upper()
-
-    # the router: ~4.1k distinct keys under the default ceiling -> auto
-    # takes the plain groupBy (no candidate IN-list in the plan, the
-    # measured-faster single-box plan); force the ceiling below the
-    # estimate -> auto takes MG (IN-list recount appears)
-    auto_plan = (
-        heavy_hitters_exact(df, "k", 0.04)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "INSET" not in auto_plan.upper() and "Join" not in auto_plan
-    forced_plan = (
-        heavy_hitters_exact(df, "k", 0.04, groupby_max_distinct=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert " IN " in forced_plan or "INSET" in forced_plan.upper()
 
 
 def test_exact_quantile_histogram_matches_sorted_truth(spark):
@@ -2748,54 +2267,6 @@ def test_ivm_join_view_bilinear_law_and_edges(spark):
     )
 
 
-def test_resample_ffill_grid_and_fill_semantics(spark):
-    """Gap-fill resample edges: each key's grid spans its OWN min..max
-    bucket; empty buckets carry n=0, filled=1, and the last populated
-    value; a populated bucket whose values are all NULL keeps n>0 /
-    filled=0 but still inherits the previous value (the fill skips
-    null aggregates, not just missing buckets); agg='last' picks the
-    latest-by-ts sample in the bucket."""
-    import datetime as dt
-
-    from etl_sendas_spark.operators.timeseries import resample_ffill
-
-    def ts(h, m=0):
-        return dt.datetime(2024, 1, 1, h, m)
-
-    rows = [
-        ("a", ts(0, 5), 10.0),
-        ("a", ts(0, 40), 20.0),   # same bucket as above (1h grid)
-        ("a", ts(3, 10), 7.0),    # 2 gap buckets before this
-        ("b", ts(5, 0), 1.0),
-        ("b", ts(6, 0), None),    # populated bucket, null value
-        ("b", ts(7, 0), 3.0),
-    ]
-    df = spark.createDataFrame(rows, "k STRING, t TIMESTAMP, v DOUBLE")
-    out = {
-        (r.k, r.bucket_ts.hour): (r.n, r.value, r.filled)
-        for r in resample_ffill(
-            df, ["k"], "t", "v", 3600, agg="avg"
-        ).collect()
-    }
-    assert out[("a", 0)] == (2, 15.0, 0)       # avg of the 2 samples
-    assert out[("a", 1)] == (0, 15.0, 1)       # gap, ffilled
-    assert out[("a", 2)] == (0, 15.0, 1)
-    assert out[("a", 3)] == (1, 7.0, 0)
-    assert ("a", 4) not in out                  # grid ends at a's max
-    assert ("b", 4) not in out                  # grid starts at b's min
-    assert out[("b", 5)] == (1, 1.0, 0)
-    assert out[("b", 6)] == (1, 1.0, 0)        # null agg inherits, n=1
-    assert out[("b", 7)] == (1, 3.0, 0)
-
-    last = {
-        (r.k, r.bucket_ts.hour): r.value
-        for r in resample_ffill(
-            df, ["k"], "t", "v", 3600, agg="last"
-        ).collect()
-    }
-    assert last[("a", 0)] == 20.0               # latest-by-ts wins
-
-
 def test_k_anonymize_suppression_properties(spark):
     """Release-gate laws: the released table is k-anonymous and
     l-diverse BY CONSTRUCTION (every surviving combination has >= k
@@ -2841,43 +2312,6 @@ def test_k_anonymize_suppression_properties(spark):
         key=key,
     )
     assert kept == orig
-
-
-def test_mad_outliers_degenerate_groups(spark):
-    """MAD edges: a wild value flags while the mean/σ rule would have
-    been inflated past it; MAD=0 groups flag exactly the values off
-    the median (NULL z); singletons never flag."""
-    from etl_sendas_spark.operators.quality_checks import mad_outliers
-
-    rows = (
-        [("a", float(v)) for v in (10, 11, 12, 11, 10, 12, 11, 1000)]
-        + [("b", 5.0), ("b", 5.0), ("b", 5.0), ("b", 9.0)]  # MAD = 0
-        + [("c", 42.0)]                                      # singleton
-    )
-    df = spark.createDataFrame(rows, "k STRING, v DOUBLE")
-    out = mad_outliers(df, ["k"], "v", thresh=3.5).collect()
-    flags = {(r.k, r.v): (r.is_outlier, r.mad_z) for r in out}
-    assert flags[("a", 1000.0)][0] == 1
-    assert all(f == 0 for (k, v), (f, _) in flags.items()
-               if k == "a" and v != 1000.0)
-    assert flags[("b", 9.0)] == (1, None)      # MAD=0: off-median flags
-    assert flags[("b", 5.0)][0] == 0
-    assert flags[("c", 42.0)][0] == 0          # singleton never flags
-
-
-def test_mad_outliers_rejects_colliding_input_columns(spark):
-    """mad_outliers raises on input columns that would collide with
-    its med/mad/mad_z/is_outlier outputs (round-10 ADVICE fix) rather
-    than producing ambiguous or duplicate columns."""
-    import pytest
-
-    from etl_sendas_spark.operators.quality_checks import mad_outliers
-
-    df = spark.createDataFrame(
-        [("a", 1.0, 9.0)], "g STRING, x DOUBLE, mad DOUBLE"
-    )
-    with pytest.raises(ValueError, match="collide"):
-        mad_outliers(df, ["g"], "x")
 
 
 def test_ivf_index_refresh_tracks_corpus_dml(spark, tmp_path):

@@ -379,25 +379,6 @@ def test_q5_join_tree_broadcasts_dims_and_pushes_dates(spark):
     assert pushed, "o_orderdate range must push into the orders scan"
 
 
-def test_kmv_sketch_scale_mode_gets_group_limit_pushdown(spark):
-    """kmv_sketch(with_exact=False) must compile its rank filter to a
-    map-side WindowGroupLimit — at corpus scale each map partition then
-    ships at most k hashes per group. The audit mode (with_exact=True)
-    pays a full count window by design; this test pins that the scale
-    mode does NOT."""
-    from pyspark.sql import functions as F
-
-    from etl_sendas_spark.operators.sketches import kmv_sketch
-
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet").select(
-        "lang", F.col("text").alias("v")
-    )
-    scale_plan = _plan(kmv_sketch(docs, ["lang"], "v", k=64, with_exact=False))
-    assert "WindowGroupLimit" in scale_plan
-    audit_plan = _plan(kmv_sketch(docs, ["lang"], "v", k=64, with_exact=True))
-    assert "WindowGroupLimit" not in audit_plan  # the documented trade
-
-
 def test_q17_decorrelates_to_single_fact_pass(spark):
     """The correlated-subquery shape must decorrelate to ONE pass over
     the fact: one lineitem scan (no self-join re-read), the part filter
@@ -480,53 +461,6 @@ def test_tpch_bucketed_layout_removes_fact_exchanges(spark):
         assert "Sort (" not in between and "Exchange" not in between, between
     finally:
         tpch.drop_bucketed_warehouse(SF_ORACLE)
-
-
-def test_bloom_probe_is_shuffle_free_and_never_false_negative(spark):
-    """The Bloom prefilter's contract, both halves: (a) every member of
-    the build set is flagged (false negatives are impossible by
-    construction), and (b) the probe side compiles to broadcast bit
-    tests — the ONLY shuffle in the whole plan is the build side's
-    word aggregate, nothing repartitions the probes."""
-    from pyspark.sql import functions as F
-
-    from etl_sendas_spark.operators.sketches import bloom_build, bloom_filter_probe
-
-    members = spark.range(0, 500).select((F.col("id") * 7).alias("v"))
-    bloom = bloom_build(members, "v", m_words=64, k_hashes=3)
-    probes = spark.range(0, 5000).select(F.col("id").alias("v"))
-    out = bloom_filter_probe(probes, "v", bloom, m_words=64, k_hashes=3)
-
-    plan = _plan(out)
-    # the build aggregate ran once at pin time; the probe-side plan has
-    # NO exchange at all — the whole test pipelines inside the scan
-    assert _shuffles(plan) == 0, f"probe side must not shuffle:\n{plan}"
-    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 3
-
-    got = {r["v"]: r["might_contain"] for r in out.collect()}
-    member_vals = {i * 7 for i in range(500)}
-    missed = [v for v in member_vals if v < 5000 and got[v] != 1]
-    assert not missed, f"false negatives: {missed[:5]}"
-    # the filter must actually reject most non-members at this sizing
-    fp = sum(1 for v, f_ in got.items() if f_ == 1 and v not in member_vals)
-    assert fp < 1000, f"degenerate filter: {fp} false positives"
-
-
-def test_quantile_sketch_compiles_to_map_side_group_limit(spark):
-    """The docstring's scale claim, pinned: the bottom-k rank filter
-    must compile to a Partial (map-side) WindowGroupLimit so each map
-    partition ships at most k rows per group — same property
-    kmv_sketch(with_exact=False) pins."""
-    from etl_sendas_spark.operators.sketches import quantile_sketch
-
-    li = spark.read.parquet(SF_ORACLE + "/lineitem.parquet")
-    sk = quantile_sketch(
-        li, ["l_returnflag"], "l_extendedprice",
-        id_cols=["l_orderkey", "l_linenumber"], k=256,
-    )
-    plan = _plan(sk)
-    assert "WindowGroupLimit" in plan
-    assert "Partial" in plan, plan
 
 
 def test_minhash_incremental_corpus_side_never_shuffles(spark):

@@ -89,50 +89,6 @@ def test_compression_ratio_matches_zlib(spark):
     assert got[5] < got[0]
 
 
-# ---------------------------------------------------------------------------
-# profile_table (operators/quality_checks.py)
-# ---------------------------------------------------------------------------
-
-
-def test_profile_table_nulls_modes_and_ties(spark):
-    from etl_sendas_spark.operators.quality_checks import profile_table
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", None),
-            (2, "b", 1.5),
-            (3, "a", 1.5),
-            (4, None, 2.5),
-            (5, None, None),
-            (6, "b", 0.5),
-        ],
-        "id long, cat string, x double",
-    )
-    got = {r["col_name"]: r.asDict() for r in profile_table(df).collect()}
-    assert got["cat"]["n_rows"] == 6
-    assert got["cat"]["n_nulls"] == 2
-    assert got["cat"]["n_distinct"] == 2
-    # tie between 'a' (2) and 'b' (2): smallest value wins
-    assert got["cat"]["top_value"] == "a" and got["cat"]["top_count"] == 2
-    assert got["x"]["n_nulls"] == 2 and got["x"]["n_distinct"] == 3
-    assert got["x"]["top_value"] == "1.5" and got["x"]["top_count"] == 2
-    assert got["id"]["n_distinct"] == 6 and got["id"]["top_count"] == 1
-
-
-def test_profile_table_all_null_column_and_job_shape(spark):
-    from etl_sendas_spark.operators.quality_checks import profile_table
-
-    df = spark.createDataFrame([(1, None), (2, None)], "id long, dead string")
-    got = {r["col_name"]: r.asDict() for r in profile_table(df).collect()}
-    assert got["dead"]["n_nulls"] == 2 and got["dead"]["n_distinct"] == 0
-    assert got["dead"]["top_value"] is None and got["dead"]["top_count"] is None
-    # scale pin: exactly two Exchanges (value counts, per-column reduce)
-    # regardless of column count, and the first aggregate is partial
-    plan = profile_table(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 2
-    assert "partial" in plan.lower()
-
-
 def test_add_char_entropy_backends_agree_and_hoist_plan(spark):
     """Arrow backend == exact backend on real corpus text (same
     alphabet-ordered float sum, same 6-dp round), and the hoisted

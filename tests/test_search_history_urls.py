@@ -179,32 +179,6 @@ def test_bm25_large_vocabulary_broadcast_path(spark):
     assert got_small == got_bcast and len(got_small) > 0
 
 
-def test_pagerank_star_graph(spark):
-    """4-leaf star, symmetrized: the hub must outrank every leaf, the
-    leaves tie exactly, and total mass stays 1 (no dangling leakage)."""
-    from etl_sendas_spark.operators.graph import pagerank, symmetrize
-
-    edges = spark.createDataFrame(
-        [("hub", f"leaf{i}") for i in range(4)], "src STRING, dst STRING"
-    )
-    rows = pagerank(symmetrize(edges), iterations=10).collect()
-    r = {row["node"]: row["pagerank"] for row in rows}
-    leaves = [r[f"leaf{i}"] for i in range(4)]
-    assert all(r["hub"] > lv for lv in leaves)
-    assert max(leaves) - min(leaves) < 1e-12  # identical by symmetry
-    assert abs(sum(r.values()) - 1.0) < 1e-9
-
-
-def test_pagerank_two_node_fixpoint(spark):
-    """K2: uniform 1/2 is the exact fixpoint at every iteration count."""
-    from etl_sendas_spark.operators.graph import pagerank, symmetrize
-
-    edges = spark.createDataFrame([("a", "b")], "src STRING, dst STRING")
-    rows = pagerank(symmetrize(edges), iterations=3).collect()
-    for row in rows:
-        assert abs(row["pagerank"] - 0.5) < 1e-12
-
-
 def test_phrase_match_repeated_tokens(spark):
     """A phrase with a repeated token must not double-count a single
     posting: 'a a' matches 'x a a b' once at pos 2, 'a a a' twice
@@ -237,19 +211,6 @@ def test_weighted_sample_is_deterministic_and_biased(spark):
     heavy = sum(1 for i in s1 if i % 10 == 0)
     # heavy rows are 10% of the population but carry ~91% of the mass
     assert heavy > 20
-
-
-def test_forest_roots_deep_chain(spark):
-    """A 20-deep chain (5 doubling rounds) plus a second 1-node tree:
-    every node must report the correct root and exact depth."""
-    from etl_sendas_spark.operators.graph import forest_roots
-
-    rows = [(0, None)] + [(i, i - 1) for i in range(1, 21)] + [(100, None)]
-    df = spark.createDataFrame(rows, "id LONG, parent LONG")
-    got = {r["id"]: (r["root"], r["depth"]) for r in forest_roots(df).collect()}
-    for i in range(21):
-        assert got[i] == (0, i), (i, got[i])
-    assert got[100] == (100, 0)
 
 
 def test_quality_deciles_no_global_window(spark):
@@ -305,140 +266,18 @@ def test_union_with_evolution_widening_rules(spark):
     assert rows[3] == (None, None)
 
 
-def test_ewma_hand_computed(spark):
-    """alpha=0.5 over [4, 0, 8]: y = [4, 2, 5] exactly (dyadic
-    fractions, so float equality is exact)."""
-    from etl_sendas_spark.operators.timeseries import ewma
-
-    df = spark.createDataFrame(
-        [(1, 1, 4.0), (1, 2, 0.0), (1, 3, 8.0), (2, 1, 7.0)],
-        "k LONG, seq LONG, value DOUBLE",
-    )
-    out = {
-        (r["k"], r["seq"]): r["ewma"]
-        for r in ewma(df, ["k"], ["seq"], "value", alpha=0.5).collect()
-    }
-    assert out == {(1, 1): 4.0, (1, 2): 2.0, (1, 3): 5.0, (2, 1): 7.0}
-
-
-def test_expectation_report_counts_each_failure_mode(spark):
-    """Synthetic frame with one violation of each kind: nulls, domain,
-    range, duplicate key, and an orphan FK — each rule must count
-    exactly its own violations (and NULL must not double-count into
-    in_set/in_range with default count_null=False)."""
-    from etl_sendas_spark.operators.quality_checks import expectation_report
-
-    df = spark.createDataFrame(
-        [
-            (1, "A", 0.01),
-            (1, "A", 0.02),    # duplicate key=1
-            (2, "X", 0.01),    # bad domain
-            (3, "N", 0.99),    # bad range
-            (None, None, None),  # null key; null domain/range NOT counted
-            (9, "R", 0.0),     # orphan FK (ref has 1,2,3 only)
-        ],
-        "k LONG, flag STRING, d DOUBLE",
-    )
-    ref = spark.createDataFrame([(1,), (2,), (3,)], "rk LONG")
-    rules = [
-        {"rule": "not_null", "col": "k"},
-        {"rule": "in_set", "col": "flag", "values": ["A", "N", "R"]},
-        {"rule": "in_range", "col": "d", "lo": 0.0, "hi": 0.1},
-        {"rule": "unique", "cols": ["k"]},
-        {"rule": "foreign_key", "col": "k", "ref": ref, "ref_col": "rk"},
-    ]
-    got = {
-        r["rule"]: (r["violations"], r["passed"], r["n_rows"])
-        for r in expectation_report(df, rules).collect()
-    }
-    assert got == {
-        "not_null": (1, False, 6),
-        "in_set": (1, False, 6),
-        "in_range": (1, False, 6),
-        "unique": (1, False, 6),
-        "foreign_key": (1, False, 6),
-    }
-
-
-def test_expectation_report_is_one_scan(spark):
-    """The whole rule suite — scalar rules, uniqueness, FK — fuses into
-    ONE aggregate over ONE scan of the fact table: exactly one fact
-    FileScan in the executed plan, the FK as a BroadcastHashJoin under
-    it, no SortMergeJoin and no second corpus pass (r4 verdict: the
-    3-branch formulation paid 3 jobs / 3 scans)."""
-    from conftest import SF_SMOKE
-
-    from etl_sendas_spark.plans.inventory import EXTRA_QUERIES
-
-    plan = (
-        EXTRA_QUERIES["dq_expectation_report"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("lineitem.parquet") == 1  # one fact scan
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # one distinct agg plans as the two-level hash aggregate (an Expand
-    # appears only when 2+ unique rules mix their distinct key sets)
-    assert plan.count("count(distinct") >= 1
-
-
 def test_operator_input_guards(spark):
     """Bad parameters fail fast with a clear message, not deep inside
-    a job: empty query/phrase/rule lists, alpha/damping out of range."""
+    a job: empty query and phrase lists."""
     import pytest
 
-    from etl_sendas_spark.operators.graph import pagerank
-    from etl_sendas_spark.operators.quality_checks import expectation_report
-    from etl_sendas_spark.operators.search import bm25_topk, phrase_match
-    from etl_sendas_spark.operators.timeseries import ewma
+    from etl_sendas_spark.operators.search import phrase_match
 
     df = spark.createDataFrame([(1, "x", 1.0)], "k LONG, t STRING, v DOUBLE")
-    e = spark.createDataFrame([("a", "b")], "src STRING, dst STRING")
     with pytest.raises(ValueError, match="empty query"):
         bm25_topk(df, [], text_col="t", id_col="k")
     with pytest.raises(ValueError, match="empty phrase"):
         phrase_match(df, [], text_col="t", id_col="k")
-    with pytest.raises(ValueError, match="alpha"):
-        ewma(df, ["k"], ["k"], "v", alpha=1.5)
-    with pytest.raises(ValueError, match="order_cols"):
-        ewma(df, ["k"], [], "v", alpha=0.5)
-    with pytest.raises(ValueError, match="damping"):
-        pagerank(e, damping=1.0)
-    with pytest.raises(ValueError, match="empty rule"):
-        expectation_report(df, [])
-
-
-def test_pagerank_rejects_dangling_nodes(spark):
-    """A non-symmetrized graph with a sink node (out-degree 0) leaks
-    rank mass; the docstring promises a cheap precondition assert, so
-    it must actually raise instead of silently mis-normalizing."""
-    import pytest
-
-    from etl_sendas_spark.operators.graph import pagerank, symmetrize
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("c", "b")], "src STRING, dst STRING"
-    )  # b is a sink
-    with pytest.raises(ValueError, match="out-degree 0"):
-        pagerank(e, iterations=2)
-    # symmetrizing repairs it: result is a proper distribution
-    r = pagerank(symmetrize(e), iterations=3).collect()
-    assert abs(sum(x["pagerank"] for x in r) - 1.0) < 1e-9
-
-
-def test_forest_roots_raises_on_cycle(spark):
-    """Cyclic parent pointers must fail fast at max_rounds, not emit
-    partial anc/depth values as if they were final."""
-    import pytest
-
-    from etl_sendas_spark.operators.graph import forest_roots
-
-    cyc = spark.createDataFrame(
-        [(1, 2), (2, 1), (3, None)], "id LONG, parent LONG"
-    )
-    with pytest.raises(ValueError, match="unresolved after"):
-        forest_roots(cyc, max_rounds=5).collect()
 
 
 def test_weighted_sample_rejects_nonpositive_weights(spark):
@@ -498,26 +337,6 @@ def test_union_with_evolution_promotion_lattice(spark):
         "1.25",
         f"{2**40}.00",
     }
-
-
-def test_personalized_pagerank_localizes_to_seed(spark):
-    """On two disconnected components, a seed in component A must give
-    ALL rank mass to A (component B stays at exactly 0), and the seed
-    itself must outrank its neighbors."""
-    from etl_sendas_spark.operators.graph import pagerank, symmetrize
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src STRING, dst STRING"
-    )
-    seeds = spark.createDataFrame([("a", 1.0)], "node STRING, weight DOUBLE")
-    r = {
-        row["node"]: row["pagerank"]
-        for row in pagerank(
-            symmetrize(edges), iterations=8, reset=seeds
-        ).collect()
-    }
-    assert r["x"] == 0.0 and r["y"] == 0.0
-    assert r["a"] > r["b"] > 0 and r["c"] > 0
 
 
 def test_new_ops_shuffle_budgets(spark):
@@ -585,58 +404,6 @@ def test_pit_join_boundary_semantics(spark):
     # t=20 boundary -> B; t=25 mid-interval -> B; t=30 -> D (the empty
     # C interval at t=30 is dropped, D wins deterministically)
     assert got == {1: None, 2: "A", 3: "B", 4: "B", 5: "D"}
-
-
-def test_hits_bipartite_semantics(spark):
-    """HITS on a small directed buyer->seller graph: the seller bought
-    by every buyer is the top authority, the buyer purchasing from the
-    most sellers is the top hub, pure-side nodes score 0 on the other
-    axis, and both vectors are L1-normalized distributions."""
-    from etl_sendas_spark.operators.graph import hits
-
-    edges = [
-        ("b1", "s1"), ("b1", "s2"), ("b1", "s3"),  # b1 buys everywhere
-        ("b2", "s1"),
-        ("b3", "s1"),                               # s1 sells to all
-    ]
-    e = spark.createDataFrame(edges, "src STRING, dst STRING")
-    r = {row["node"]: (row["hub"], row["authority"]) for row in hits(e, 4).collect()}
-    hubs = {k: v[0] for k, v in r.items()}
-    auths = {k: v[1] for k, v in r.items()}
-    assert hubs["b1"] > hubs["b2"] == hubs["b3"] > 0
-    assert auths["s1"] > auths["s2"] == auths["s3"] > 0
-    assert all(auths[b] == 0 for b in ("b1", "b2", "b3"))
-    assert all(hubs[s] == 0 for s in ("s1", "s2", "s3"))
-    assert abs(sum(hubs.values()) - 1.0) < 1e-9
-    assert abs(sum(auths.values()) - 1.0) < 1e-9
-
-    import pytest
-
-    with pytest.raises(ValueError, match="iterations"):
-        hits(e, 0)
-
-
-def test_group_ols_hand_computed(spark):
-    """OLS sufficient-statistics corners: an exact line recovers
-    slope/intercept/R2=1 exactly (dyadic inputs, decimal sums — no
-    float tolerance needed); constant x yields NULL slope/intercept;
-    constant y yields slope 0 and NULL R2 (zero variance on either
-    axis never divides)."""
-    from etl_sendas_spark.operators.timeseries import group_ols
-
-    rows = (
-        [("line", float(x), 2.0 * x + 1.0) for x in range(5)]
-        + [("constx", 3.0, float(v)) for v in (1, 2, 3)]
-        + [("consty", float(x), 7.0) for x in (1, 2, 3)]
-    )
-    df = spark.createDataFrame(rows, "k STRING, x DOUBLE, y DOUBLE")
-    got = {
-        r["k"]: (r["n"], r["slope"], r["intercept"], r["r2"])
-        for r in group_ols(df, ["k"], "x", "y").collect()
-    }
-    assert got["line"] == (5, 2.0, 1.0, 1.0)
-    assert got["constx"][1] is None and got["constx"][2] is None
-    assert got["consty"][1] == 0.0 and got["consty"][3] is None
 
 
 def test_cooccurrence_pmi_hand_computed(spark):

@@ -466,147 +466,6 @@ def test_streaming_restart_resumes_from_checkpoint(spark, tmp_path):
     assert spark.read.parquet(out).count() == full.count()
 
 
-def test_streaming_quantile_sketch_equals_batch_across_batches(spark, tmp_path):
-    """The bottom-k sample is order-insensitive, so the sketch built
-    across three micro-batches must equal the batch sketch over the
-    union BYTE-FOR-BYTE — hashes, values, and count — regardless of how
-    rows were split into batches."""
-    import os
-
-    from etl_sendas_spark.operators.sketches import quantile_sketch
-    from etl_sendas_spark.streaming.sessions import (
-        quantile_sketch_stream,
-        run_stream_to_memory,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    rows = [(i, "a" if i % 2 == 0 else "b", float((i * 37) % 101)) for i in range(600)]
-
-    def write_file(n, chunk, mtime):
-        path = os.path.join(src, f"f{n}.parquet")
-        spark.createDataFrame(
-            chunk, "event_id long, event_type string, value double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (mtime, mtime))
-        os.utime(path, (mtime, mtime))
-
-    write_file(1, rows[:200], 1_000)
-    write_file(2, rows[200:400], 2_000)
-    write_file(3, rows[400:], 3_000)
-
-    schema = spark.read.parquet(os.path.join(src, "f1.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "f*.parquet"))
-    )
-    sk = quantile_sketch_stream(
-        stream, group_col="event_type", value_col="value", id_col="event_id", k=64
-    )
-    run_stream_to_memory(sk, "t_qsk_stream", output_mode="update")
-    snap = spark.table("t_qsk_stream")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
-    streamed = {
-        r["event_type"]: (list(r["hvs"]), list(r["vs"]), r["n_seen"])
-        for r in snap.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .collect()
-    }
-
-    batch = spark.createDataFrame(
-        rows, "event_id long, event_type string, value double"
-    )
-    expected = {
-        r["event_type"]: (
-            [x["hv"] for x in r["qsk"]],
-            [x["v"] for x in r["qsk"]],
-        )
-        for r in quantile_sketch(
-            batch, ["event_type"], "value", id_cols=["event_id"], k=64
-        ).collect()
-    }
-    assert set(streamed) == {"a", "b"}
-    for g in ("a", "b"):
-        assert streamed[g][0] == expected[g][0], g   # identical hashes
-        assert streamed[g][1] == expected[g][1], g   # identical values
-        assert streamed[g][2] == 300                 # every row counted
-
-
-def test_streaming_quantile_sketch_small_group_sorted(spark, tmp_path):
-    """r5 advice: a group that never exceeds k must STILL emit its
-    sketch sorted by (hv, v) — the batch sketch is sort_array'ed, so
-    arrival-order state would break the bit-for-bit parity claim for
-    small groups. Rows are written in an order scrambled against hash
-    order to make the difference observable."""
-    import os
-
-    from etl_sendas_spark.operators.sketches import quantile_sketch
-    from etl_sendas_spark.streaming.sessions import (
-        quantile_sketch_stream,
-        run_stream_to_memory,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # 30 rows per group, k=64 -> the bottom-k cut never triggers
-    rows = [(i, "a" if i % 2 == 0 else "b", float((i * 37) % 101)) for i in range(60)]
-    import random as _random
-
-    _random.Random(7).shuffle(rows)
-
-    def write_file(n, chunk, mtime):
-        path = os.path.join(src, f"f{n}.parquet")
-        spark.createDataFrame(
-            chunk, "event_id long, event_type string, value double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (mtime, mtime))
-        os.utime(path, (mtime, mtime))
-
-    write_file(1, rows[:30], 1_000)
-    write_file(2, rows[30:], 2_000)
-
-    schema = spark.read.parquet(os.path.join(src, "f1.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "f*.parquet"))
-    )
-    sk = quantile_sketch_stream(
-        stream, group_col="event_type", value_col="value", id_col="event_id", k=64
-    )
-    run_stream_to_memory(sk, "t_qsk_small", output_mode="update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
-    streamed = {
-        r["event_type"]: (list(r["hvs"]), list(r["vs"]), r["n_seen"])
-        for r in spark.table("t_qsk_small")
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .collect()
-    }
-    batch = spark.createDataFrame(
-        rows, "event_id long, event_type string, value double"
-    )
-    expected = {
-        r["event_type"]: ([x["hv"] for x in r["qsk"]], [x["v"] for x in r["qsk"]])
-        for r in quantile_sketch(
-            batch, ["event_type"], "value", id_cols=["event_id"], k=64
-        ).collect()
-    }
-    for g in ("a", "b"):
-        assert streamed[g][0] == expected[g][0], g
-        assert streamed[g][1] == expected[g][1], g
-        assert streamed[g][2] == 30
-
-
 def test_gap_anchor_evictions_piggyback_on_data_batches(spark, tmp_path):
     """Settles the round-4/5 bench residual: on a MULTI-BATCH source,
     eviction work rides the data batches. The static bench harness has

@@ -25,8 +25,8 @@ def oracle_type_problems(con, sql: str) -> list[str]:
     """DuckDB output-column types the driver's type-sensitive hash rejects.
 
     SUM(BIGINT) is HUGEINT (int128) in DuckDB while Spark emits BIGINT —
-    the exact class that broke bpe_pair_counts_docs / dq_profile_events in
-    round 6 (values identical, hash red). DECIMAL outputs drift the same
+    the exact class that broke bpe_pair_counts_docs in round 6 (values
+    identical, hash red). DECIMAL outputs drift the same
     way. Intermediate/CTE sums are fine; this inspects only the final
     relation schema, which is what the driver hashes.
     """
