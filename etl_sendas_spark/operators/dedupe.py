@@ -264,13 +264,30 @@ def _signatures_from_shingles(
         F.col(id_col),
         F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"),
     )
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("hs"), lambda h: F.xxhash64(F.lit(i), h)))
-            for i in range(num_hashes)
-        ]
+    return hs.select(
+        F.col(id_col), _minhash_family(F.col("hs"), num_hashes).alias("signature")
     )
-    return hs.select(F.col(id_col), sig.alias("signature"))
+
+
+def _minhash_family(hs: Column, num_hashes: int) -> Column:
+    """The seeded MinHash family over one row's shingle hashes ``hs``:
+    element i is ``array_min(transform(hs, h -> xxhash64(i, h)))``.
+
+    One lambda over the seed sequence rather than a ``num_hashes``-wide
+    array of lambdas, which cost about 0.5 s more query planning per
+    plan at 64 seeds (same values). ``hs`` must be a column of its own
+    projection. The size guard references it a second time so that
+    Catalyst's CollapseProject does not inline its per-shingle string
+    hashing into the seed lambda, where it would run once per seed;
+    shingle arrays are never empty, so the guard never yields NULL.
+    """
+    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
+    return F.when(
+        F.size(hs) > 0,
+        F.transform(
+            seeds, lambda i: F.array_min(F.transform(hs, lambda h: F.xxhash64(i, h)))
+        ),
+    )
 
 
 def _band_buckets(
@@ -294,16 +311,19 @@ def _band_buckets(
     path's wire width is unchanged.
     """
     rows_per_band = num_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("bhash"),
+    # one SQL expression: assembled Column by Column it took a few
+    # hundred Python-to-JVM calls per frame, about 0.3 s at 16 bands
+    band_structs = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, 'bhash', xxhash64("
+            + ", ".join(
+                f"signature[{b * rows_per_band + r}]" for r in range(rows_per_band)
             )
+            + "))"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
     cols = [F.col(id_col).alias("doc"), F.explode(band_structs).alias("bb")]
     out = ["doc", F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash")]
@@ -1045,30 +1065,25 @@ def minhash_lsh_index(
         "sh",
         F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("__hs"),
     )
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("__hs"), lambda h: F.xxhash64(F.lit(i), h)))
-            for i in range(num_hashes)
-        ]
-    )
+    sig = _minhash_family(F.col("__hs"), num_hashes)
     return hs.select(F.col("doc").alias(id_col), "sh", sig.alias("signature"))
 
 
 def minhash_lsh_incremental(
     index: DataFrame,
-    wave_df: DataFrame,
+    wave_index: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
     verify_threshold: float = 0.5,
-    broadcast_wave: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs INVOLVING a new ingest wave, probed against a
     stored :func:`minhash_lsh_index` — the historical corpus is never
-    re-shingled.
+    re-shingled, and neither is the wave: ``wave_index`` carries the
+    wave's own ``(id, sh, signature)`` rows (build them once with
+    :func:`minhash_lsh_index`; the refresh step reads them from its
+    pinned wave frame).
 
     Returns (id_a, id_b, jaccard, origin) with id_a < id_b and origin ∈
     {'wave-index', 'wave-wave'}; index-index pairs are by construction
@@ -1076,10 +1091,10 @@ def minhash_lsh_incremental(
     wave). Two candidate joins:
 
     - wave × index on (band, bhash): the wave's bucket rows are
-      BROADCAST (``broadcast_wave``, default) — a daily wave is tiny
-      next to the corpus, so the index side streams scan→BHJ with ZERO
-      index shuffle. The index's bucket rows derive from the stored
-      signature by a narrow explode; no text, no re-hash.
+      BROADCAST — a daily wave is tiny next to the corpus, so the
+      index side streams scan→BHJ with ZERO index shuffle. The index's
+      bucket rows derive from the stored signature by a narrow
+      explode; no text, no re-hash.
     - wave × wave: a self-join of the wave's own buckets (small).
 
     Candidates are then verified with exact shingle Jaccard by joining
@@ -1087,22 +1102,17 @@ def minhash_lsh_incremental(
     again broadcast-sized joins keyed by id. Same banded family, same
     verification rule as :func:`minhash_lsh_candidates`, so batch and
     incremental agree bit-for-bit on the same corpus split.
+    ``materialize`` pins the verified pairs; pass False to keep them
+    lazy inside a caller's larger plan.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    wave_idx = minhash_lsh_index(wave_df, id_col, text_col, num_hashes, shingle_n)
-    if materialize:
-        from pyspark import StorageLevel
-
-        wave_idx = wave_idx.persist(StorageLevel.MEMORY_AND_DISK)
-
-    wb = _band_buckets(wave_idx, id_col, num_hashes, bands)
+    wb = _band_buckets(wave_index, id_col, num_hashes, bands)
     ib = _band_buckets(index.select(id_col, "signature"), id_col, num_hashes, bands)
-    wb_probe = F.broadcast(wb) if broadcast_wave else wb
 
     cross = (
         ib.alias("a")
         .join(
-            wb_probe.alias("b"),
+            F.broadcast(wb).alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bhash") == F.col("b.bhash"))
             & (F.col("a.doc") != F.col("b.doc")),
@@ -1112,12 +1122,11 @@ def minhash_lsh_incremental(
             F.greatest(F.col("a.doc"), F.col("b.doc")).alias("id_b"),
             F.lit("wave-index").alias("origin"),
         )
-        .distinct()
     )
     within = (
         wb.alias("a")
         .join(
-            F.broadcast(wb.alias("b")) if broadcast_wave else wb.alias("b"),
+            F.broadcast(wb.alias("b")),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bhash") == F.col("b.bhash"))
             & (F.col("a.doc") < F.col("b.doc")),
@@ -1127,23 +1136,21 @@ def minhash_lsh_incremental(
             F.col("b.doc").alias("id_b"),
             F.lit("wave-wave").alias("origin"),
         )
-        .distinct()
     )
-    cand = cross.unionByName(within)
     # candidates are wave-bounded (every pair touches a wave doc), so
     # the verification joins broadcast THEM — the corpus-sized shingle
-    # table is only ever the streamed probe side, never shuffled
-    if broadcast_wave:
-        cand = F.broadcast(cand)
+    # table is only ever the streamed probe side, never shuffled. The
+    # two origins never share a row, so one distinct serves both.
+    cand = F.broadcast(cross.unionByName(within).distinct())
 
     sh_all = index.select(F.col(id_col).alias("doc"), "sh").unionByName(
-        wave_idx.select(F.col(id_col).alias("doc"), "sh")
+        wave_index.select(F.col(id_col).alias("doc"), "sh")
     )
     sa = sh_all.select(F.col("doc").alias("id_a"), F.col("sh").alias("__sa"))
     sb = sh_all.select(F.col("doc").alias("id_b"), F.col("sh").alias("__sb"))
     inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
     verified = (
-        cand.join(sa, "id_a")
+        F.broadcast(cand.join(sa, "id_a"))
         .join(sb, "id_b")
         .withColumn(
             "jaccard",
@@ -1154,7 +1161,35 @@ def minhash_lsh_incremental(
     )
     if not materialize:
         return verified
-    return _materialize_release(verified, wave_idx, name="minhash_incremental_pairs")
+    return _pin(verified, name="minhash_incremental_pairs")
+
+
+def minhash_wave_dups(
+    wave_index: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """(id) of the wave docs that near-dedup drops — the survivor
+    policy of :func:`minhash_index_append`, which mirrors
+    :func:`incremental_dedup`: history is canonical — a wave doc is
+    dropped if it near-matched ANY index doc (either pair orientation)
+    or a lower-id doc within its own wave. ``pairs`` is
+    :func:`minhash_lsh_incremental` output; ``wave_index`` the wave's
+    rows, of which only the ids are read (broadcast — the wave is the
+    small side, the corpus index is never touched here)."""
+    wave_ids = wave_index.select(F.col(id_col).alias("__wid"))
+    # the dropped member: id_b of a wave-wave pair; of a cross pair,
+    # whichever side is the wave's
+    return (
+        pairs.join(F.broadcast(wave_ids), F.col("id_a") == F.col("__wid"), "left")
+        .select(
+            F.when(
+                (F.col("origin") == "wave-index") & F.col("__wid").isNotNull(),
+                F.col("id_a"),
+            )
+            .otherwise(F.col("id_b"))
+            .alias(id_col)
+        )
+        .distinct()
+    )
 
 
 def minhash_index_append(
@@ -1163,30 +1198,12 @@ def minhash_index_append(
     pairs: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Updated index = old index ∪ the wave's NON-duplicate docs.
-
-    Survivor policy mirrors :func:`incremental_dedup`: history is
-    canonical — a wave doc is dropped if it near-matched ANY index doc
-    (either pair orientation) or a lower-id doc within its own wave.
-    ``pairs`` is :func:`minhash_lsh_incremental` output; ``wave_index``
-    the wave's :func:`minhash_lsh_index` rows.
-    """
-    wi = pairs.filter(F.col("origin") == "wave-index")
-    ww = pairs.filter(F.col("origin") == "wave-wave")
-    index_ids = index.select(F.col(id_col).alias("__iid"))
-    # wave-side member of each cross pair = whichever side is NOT in the index
-    wave_dups = (
-        wi.join(index_ids, F.col("id_a") == F.col("__iid"), "left")
-        .select(
-            F.when(F.col("__iid").isNotNull(), F.col("id_b"))
-            .otherwise(F.col("id_a"))
-            .alias(id_col)
-        )
-        .unionByName(ww.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    fresh = wave_index.join(wave_dups, on=id_col, how="left_anti")
-    return index.unionByName(fresh)
+    """Updated index = old index ∪ the wave's NON-duplicate docs (the
+    policy of :func:`minhash_wave_dups`). ``pairs`` is
+    :func:`minhash_lsh_incremental` output; ``wave_index`` the wave's
+    :func:`minhash_lsh_index` rows."""
+    dups = minhash_wave_dups(wave_index, pairs, id_col)
+    return index.unionByName(wave_index.join(dups, on=id_col, how="left_anti"))
 
 
 # --------------------------------------------------------------------------

@@ -44,7 +44,7 @@ def dedup_minhash_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFram
     docs = _t(spark, sf_dir, "documents")
     index = minhash_lsh_index(docs.filter(F.col("doc_id") % 3 != 2))
     wave = docs.filter(F.col("doc_id") % 3 == 2)
-    pairs = minhash_lsh_incremental(index, wave)
+    pairs = minhash_lsh_incremental(index, minhash_lsh_index(wave))
     return pairs.orderBy("id_a", "id_b")
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -762,14 +763,23 @@ class TxLogDataSource(DataSource):
         return _TxLogStreamWriter(self.options, schema, overwrite)
 
 
+_REGISTER_LOCK = threading.Lock()
+
+
 def register_txlog_source(spark) -> None:
     """Register ``format("txlog")`` on this session (Python data
-    sources are per-session; idempotent to call again). Also enables
+    sources are per-session; idempotent to call again, from any number
+    of threads at once — concurrent registrations on one session can
+    fail with DATA_SOURCE_ALREADY_EXISTS, so they are serialised and a
+    session that already has the source is left alone). Also enables
     Python-data-source filter pushdown so the reader's manifest
     pruning sees Catalyst's predicates (a plain SQL conf — settable at
     runtime on sessions not built by this package's factory)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(TxLogDataSource)
+    with _REGISTER_LOCK:
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        registry = spark._jsparkSession.sessionState().dataSourceManager()
+        if not registry.dataSourceExists(TxLogDataSource.name()):
+            spark.dataSource.register(TxLogDataSource)
 
 
 # ---------------------------------------------------------------------------

@@ -537,7 +537,8 @@ def test_minhash_incremental_matches_batch_and_append_law(spark):
     assert want, "vacuous: no wave-involving pairs at this SF"
 
     index = minhash_lsh_index(old)
-    inc_df = minhash_lsh_incremental(index, wave)
+    wave_index = minhash_lsh_index(wave)
+    inc_df = minhash_lsh_incremental(index, wave_index)
     inc = inc_df.collect()
     got = {(r["id_a"], r["id_b"], r["jaccard"]) for r in inc}
     assert got == want
@@ -547,7 +548,6 @@ def test_minhash_incremental_matches_batch_and_append_law(spark):
         assert r["origin"] == ("wave-wave" if both_wave else "wave-index")
 
     # append law
-    wave_index = minhash_lsh_index(wave)
     appended = minhash_index_append(index, wave_index, inc_df)
     old_ids = {r["doc_id"] for r in index.select("doc_id").collect()}
     wave_ids = {r["doc_id"] for r in wave_index.select("doc_id").collect()}
@@ -783,3 +783,176 @@ def test_corpus_refresh_manifest_never_exposes_torn_wave(spark, tmp_path):
     shutil.rmtree(f"{legacy}/_manifest")
     snap_l, pins_l = corpus_snapshot(spark, legacy)
     assert pins_l == {} and {r.doc_id for r in snap_l.collect()} == {7}
+
+
+# Documents that pass the Gopher panel (about 96 words each), a
+# near-copy of the first, and one that fails it (too few words).
+_TEXT_A = (
+    "the quick brown fox jumps over the lazy dog and then the dog "
+    "chases the fox around the field for hours in the warm sun "
+) * 4
+_TEXT_B = (
+    "completely different subject matter about database engines and "
+    "the storage layouts that make large scans fast in practice "
+) * 4
+_TEXT_C = (
+    "meanwhile the harbor town prepared for the winter festival "
+    "with lanterns strung between the masts of the fishing boats "
+) * 4
+_TEXT_D = (
+    "a long letter arrived from the mountains describing the old "
+    "railway line and the people who still walk along it each spring "
+) * 4
+_NEAR_A = _TEXT_A + "with one extra trailing clause at the end"
+_LOW = "buy cheap pills now"
+
+
+def _wave(spark, rows):
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+
+
+def _corpus_state(spark, root):
+    """Sorted rows of the three state tables (arrays as tuples)."""
+    from etl_sendas_spark.sources.txlog import TxLogTable
+
+    def key(row):
+        return tuple(tuple(v) if isinstance(v, list) else v for v in row)
+
+    return {
+        sub: sorted(key(r) for r in TxLogTable(f"{root}/{sub}").read(spark).collect())
+        for sub in ("docs", "fps", "mh")
+    }
+
+
+def test_corpus_refresh_equal_under_every_pin_strategy(spark, tmp_path):
+    """The refresh result does not depend on how the wave frame is
+    pinned: a fresh wave, a wave of exact copies, near copies, a
+    low-quality doc and a fresh doc, then a redelivery of that wave
+    give the same summaries and the same docs/fps/mh contents under
+    every ``spark.etl_sendas.materialize`` strategy."""
+    from etl_sendas_spark.materialize import CONF_STRATEGY
+    from etl_sendas_spark.plans.corpus_refresh import corpus_refresh_step
+
+    waves = [
+        ("w1", [(1, _TEXT_A), (2, _TEXT_B), (3, _TEXT_C)]),
+        ("w2", [(10, _TEXT_A.upper()), (11, _NEAR_A), (12, _LOW),
+                (13, _TEXT_D), (14, None)]),
+        ("w2", [(10, _TEXT_A.upper()), (11, _NEAR_A), (12, _LOW),
+                (13, _TEXT_D), (14, None)]),
+    ]
+    old = spark.conf.get(CONF_STRATEGY, None)
+    results = {}
+    try:
+        for strategy in ("local", "reliable", "parquet", "none"):
+            spark.conf.set(CONF_STRATEGY, strategy)
+            root = str(tmp_path / strategy)
+            summaries = [
+                corpus_refresh_step(spark, root, _wave(spark, rows), wid)
+                for wid, rows in waves
+            ]
+            results[strategy] = (summaries, _corpus_state(spark, root))
+    finally:
+        if old is None:
+            spark.conf.unset(CONF_STRATEGY)
+        else:
+            spark.conf.set(CONF_STRATEGY, old)
+    summaries, state = results["local"]
+    assert [s["accepted"] for s in summaries] == [3, 1, 1]
+    assert summaries[1]["rejected_exact"] == 1
+    assert summaries[1]["rejected_near"] == 1
+    assert summaries[1]["rejected_quality"] == 1
+    assert summaries[2]["manifest_version"] == "already"
+    assert {r[0] for r in state["docs"]} == {1, 2, 3, 13}
+    for strategy, got in results.items():
+        assert got == results["local"], strategy
+
+
+def test_corpus_refresh_all_low_quality_wave(spark, tmp_path):
+    """A wave in which every doc fails the quality gate accepts
+    nothing, yet still advances the manifest by one record, and the
+    reader's snapshot is unchanged."""
+    from etl_sendas_spark.plans.corpus_refresh import (
+        corpus_refresh_step,
+        corpus_snapshot,
+    )
+    from etl_sendas_spark.sources.txlog import Catalog
+
+    root = str(tmp_path / "q")
+    corpus_refresh_step(spark, root, _wave(spark, [(1, _TEXT_A), (2, _TEXT_B)]), "w1")
+    before = sorted(map(tuple, corpus_snapshot(spark, root)[0].collect()))
+    s = corpus_refresh_step(
+        spark, root, _wave(spark, [(5, _LOW), (6, "tiny"), (7, "")]), "w2"
+    )
+    assert s["wave_rows"] == 3 and s["rejected_quality"] == 3
+    assert s["accepted"] == 0
+    assert s["manifest_version"] == 1
+    assert len(Catalog(f"{root}/_manifest").versions()) == 2
+    snap, pins = corpus_snapshot(spark, root)
+    assert pins["wave_id"] == "w2"
+    assert sorted(map(tuple, snap.collect())) == before
+
+
+def test_corpus_refresh_in_wave_pairs_keep_lower_id(spark, tmp_path):
+    """An exact pair and a near pair inside one wave (origin
+    wave-wave): the lower id of each pair survives."""
+    from etl_sendas_spark.plans.corpus_refresh import corpus_refresh_step
+    from etl_sendas_spark.sources.txlog import TxLogTable
+
+    root = str(tmp_path / "ww")
+    s = corpus_refresh_step(
+        spark, root,
+        _wave(spark, [(21, _TEXT_B), (20, _TEXT_B + " !"),
+                      (30, _TEXT_A), (31, _NEAR_A)]),
+        "w1",
+    )
+    assert s["rejected_exact"] == 1 and s["rejected_near"] == 1
+    assert s["accepted"] == 2
+    kept = {r.doc_id for r in TxLogTable(f"{root}/docs").read(spark).collect()}
+    assert kept == {20, 30}
+
+
+def test_corpus_refresh_null_text_rows_are_not_wave_rows(spark, tmp_path):
+    """Rows with NULL text are dropped before the gates: they count in
+    no gate and never land."""
+    from etl_sendas_spark.plans.corpus_refresh import corpus_refresh_step
+    from etl_sendas_spark.sources.txlog import TxLogTable
+
+    root = str(tmp_path / "n")
+    s = corpus_refresh_step(
+        spark, root,
+        _wave(spark, [(1, _TEXT_A), (2, None), (3, _TEXT_C), (4, None)]),
+        "w1",
+    )
+    assert s["wave_rows"] == 2 and s["rejected_quality"] == 0
+    assert s["accepted"] == 2
+    kept = {r.doc_id for r in TxLogTable(f"{root}/docs").read(spark).collect()}
+    assert kept == {1, 3}
+
+
+def test_corpus_refresh_wave_job_budget(spark, tmp_path):
+    """Hard budget on the Spark jobs of one steady-state wave (the
+    index tables exist): 29 measured on local[8] with 4 shuffle
+    partitions (58 before the wave frame was pinned once) — the pin of
+    the wave frame, the two snapshot reads, the one counting pass that
+    takes every gate decision, and three landings. A stray count(), a re-shingle of the wave or a second
+    probe must turn this red; raise the budget only with a measured
+    reason."""
+    from etl_sendas_spark.plans.corpus_refresh import corpus_refresh_step
+
+    root = str(tmp_path / "jobs")
+    corpus_refresh_step(spark, root, _wave(spark, [(1, _TEXT_A), (2, _TEXT_B)]), "w1")
+    sc = spark.sparkContext
+    group = f"corpus-wave-budget-{id(tmp_path)}"
+    sc.setJobGroup(group, "one steady-state corpus wave")
+    try:
+        s = corpus_refresh_step(
+            spark, root,
+            _wave(spark, [(10, _NEAR_A), (11, _TEXT_C), (12, _TEXT_B), (13, _LOW)]),
+            "w2",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["accepted"] == 1
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= 29, f"jobs per corpus wave grew to {n} (budget 29)"

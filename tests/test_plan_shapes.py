@@ -479,7 +479,9 @@ def test_minhash_incremental_corpus_side_never_shuffles(spark):
     docs = read_table(spark, SF_ORACLE, "documents")
     index = minhash_lsh_index(docs.filter(F.col("doc_id") % 3 != 2))
     pairs = minhash_lsh_incremental(
-        index, docs.filter(F.col("doc_id") % 3 == 2), materialize=False
+        index,
+        minhash_lsh_index(docs.filter(F.col("doc_id") % 3 == 2)),
+        materialize=False,
     )
     plan = _plan(pairs)
     assert "SortMergeJoin" not in plan

@@ -700,3 +700,27 @@ def test_transform_partitioned_table_schema_stays_hidden(spark, tmp_path):
         (r["event_id"], r["user_id"], r["value"]) for r in b.collect()
     )
     assert got == exp
+
+
+def test_register_from_many_threads_on_one_session(spark, tmp_path):
+    """register_txlog_source is safe to call from 8 threads at once on
+    one session (a fresh one, so the source is not registered yet):
+    every call returns, and format("txlog") then reads the table."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    session = spark.newSession()
+    root = str(tmp_path / "t")
+    t = TxLogTable.create(root, _rows(spark, 0, 30))
+    start = threading.Barrier(8)
+
+    def register(_):
+        start.wait()
+        register_txlog_source(session)
+
+    with ThreadPoolExecutor(8) as pool:
+        list(pool.map(register, range(8)))
+    got = session.read.format("txlog").load(root)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, t.read(session).collect())
+    )
